@@ -3,9 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, StructField, StructType}
 
 /** Native vector kernels for the similarity/dedup hot path.
   *
@@ -214,51 +217,6 @@ object VectorKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** PQ reconstruction of one vector (round 17): slice into `subDim`
-    * subvectors (CEIL division — a partial tail subvector is kept, the
-    * pre-r16 `pos DIV subDim` grouping and the oracle's (i−1)//subDim
-    * both keep it; ADVICE r16), argmin each against its sub's
-    * code-sorted codeword array ([[pqArgmin]]'s fold and tie-break), and
-    * concatenate the winning codewords — one codegen'd pass instead of a
-    * sequence/slice/fold lambda chain per row. `cbs` is sub-sorted and
-    * sub-dense (every sub has sampled codewords). */
-  def pqReconstruct(v: ArrayData, cbs: ArrayData, subDim: Int): ArrayData = {
-    val x = v.toDoubleArray()
-    val nSubs = (x.length + subDim - 1) / subDim
-    val out = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var si = 0
-    while (si < nSubs) {
-      val from = si * subDim
-      val len = math.min(subDim, x.length - from)
-      val cws = cbs.getStruct(si, 2).getArray(1)
-      var bestDist = Double.MaxValue
-      var bestCode = Long.MaxValue
-      var bestCw: ArrayData = null
-      var ci = 0
-      val nc = cws.numElements()
-      while (ci < nc) {
-        val e = cws.getStruct(ci, 2)
-        val code = e.getLong(0)
-        val w = e.getArray(1).toDoubleArray()
-        val m = math.min(len, w.length)
-        var acc = 0.0
-        var j = 0
-        while (j < m) { val d = x(from + j) - w(j); acc += d * d; j += 1 }
-        if (acc < bestDist || (acc == bestDist && code < bestCode)) {
-          bestDist = acc; bestCode = code; bestCw = e.getArray(1)
-        }
-        ci += 1
-      }
-      if (bestCw != null) {
-        val w = bestCw.toDoubleArray()
-        var j = 0
-        while (j < w.length) { out += w(j); j += 1 }
-      }
-      si += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-
   /** Multiset overlap of two arrays sorted by the same total key — the
     * containment/PPJoin verify prefilter (round 17). Inputs are the
     * dedup operators' (df, h)-sorted struct arrays (one entry per
@@ -301,60 +259,46 @@ object VectorKernels {
   def lsh_bucket(v: Column, planes: Array[Array[Double]]): Column =
     Bridge.column(LshBucketBits(Bridge.expression(v), planes))
 
+  /** `pq_argmin(array<double>, array<struct<code:long, cw:array<double>>>)
+    * -> struct<dist, code, cw>` — [[pqArgmin]]. */
   def pq_argmin(sv: Column, cws: Column): Column =
-    Bridge.column(PqArgminL2(Bridge.expression(sv), Bridge.expression(cws)))
+    kernel("pqArgmin", StructType(Seq(
+      StructField("dist", DoubleType, nullable = false),
+      StructField("code", LongType, nullable = false),
+      StructField("cw", ArrayType(DoubleType), nullable = true))), sv, cws)
 
+  /** `ivf_argmax(array<double>, array<struct<cell:int, cv:array<double>>>)
+    * -> int` — [[ivfArgmax]]. */
   def ivf_argmax(v: Column, cents: Column): Column =
-    Bridge.column(IvfArgmaxCell(Bridge.expression(v), Bridge.expression(cents)))
+    kernel("ivfArgmax", IntegerType, v, cents)
 
-  def ivf_probes(qv: Column, cents: Column, nProbe: Int): Column =
-    Bridge.column(IvfProbeCellsExpr(
-      Bridge.expression(qv), Bridge.expression(cents), nProbe))
+  /** `ivf_probes(array<double>, array<struct<cell:int, cv:array<double>>>)
+    * -> array<int>` — [[ivfProbeCells]]. */
+  def ivf_probes(qv: Column, cents: Column, nProbe: Int): Column = {
+    require(nProbe >= 1, "nProbe must be >= 1")
+    kernel("ivfProbeCells", ArrayType(IntegerType, containsNull = false),
+      qv, cents, lit(nProbe))
+  }
 
+  /** `sq8_dequant(array<double>, array<struct<pos:int, mn:double, mx:double>>)
+    * -> array<double>` — [[sq8Dequant]]. */
   def sq8_dequant(v: Column, st: Column): Column =
-    Bridge.column(Sq8DequantExpr(Bridge.expression(v), Bridge.expression(st)))
+    kernel("sq8Dequant", ArrayType(DoubleType, containsNull = false), v, st)
 
-  def pq_reconstruct(v: Column, cbs: Column, subDim: Int): Column =
-    Bridge.column(PqReconstructExpr(
-      Bridge.expression(v), Bridge.expression(cbs), subDim))
-
+  /** `sorted_overlap(array<struct<df,h>>, array<struct<df,h>>) -> int` —
+    * [[sortedOverlapCount]]. */
   def sorted_overlap(a: Column, b: Column): Column =
-    Bridge.column(SortedOverlapCountExpr(
-      Bridge.expression(a), Bridge.expression(b)))
-}
+    kernel("sortedOverlapCount", IntegerType, a, b)
 
-/** `sorted_overlap(array<struct<df,h>>, array<struct<df,h>>) -> int` —
-  * the two-pointer multiset overlap of two consistently-sorted id
-  * arrays ([[VectorKernels.sortedOverlapCount]]); round 17. */
-case class SortedOverlapCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types._
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_overlap"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(_: StructType, _), ArrayType(_: StructType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sorted_overlap requires two array<struct>, got " +
-            s"${left.dataType.sql} / ${right.dataType.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.sortedOverlapCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.sortedOverlapCount($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** One of the kernels above as a Catalyst `StaticInvoke`: codegen emits
+    * the direct static call `graft.functions.VectorKernels.<name>(...)`,
+    * the interpreted path finds the same method by reflection, and a null
+    * argument gives a null result without calling the kernel. No input
+    * types are declared, so the analyzer inserts no implicit casts in
+    * front of what the kernel reads; the operators fix the column types. */
+  private def kernel(name: String, dataType: DataType, args: Column*): Column =
+    Bridge.column(StaticInvoke(getClass, dataType, name,
+      args.map(Bridge.expression), propagateNull = true, returnNullable = false))
 }
 
 /** `cosine(array<float|double>, array<float|double>) -> double`, full
@@ -406,7 +350,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 case class LshBucketBits(child: Expression, planes: Array[Array[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "lsh_bucket"
 
   // float corpus columns and double derived vectors (e.g. the MIPS
@@ -431,187 +375,3 @@ case class LshBucketBits(child: Expression, planes: Array[Array[Double]])
     copy(child = newChild)
 }
 
-/** `pq_argmin(array<double>, array<struct<code:long, cw:array<double>>>)
-  * -> struct<dist:double, code:long, cw:array<double>>` — the PQ
-  * codeword argmin as one codegen'd kernel call
-  * ([[VectorKernels.pqArgmin]]); selection rule and IEEE fold order
-  * identical to the declarative aggregate-of-zip_with form it replaces
-  * (round 16 — the quantization queries spent their assignment stage in
-  * interpreted lambda dispatch). */
-case class PqArgminL2(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types._
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("dist", DoubleType, nullable = false),
-    StructField("code", LongType, nullable = false),
-    StructField("cw", ArrayType(DoubleType), nullable = true)))
-  override def prettyName: String = "pq_argmin"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(_: StructType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_argmin requires (array<double>, array<struct>), got " +
-            s"${left.dataType.sql} / ${right.dataType.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.pqArgmin(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.pqArgmin($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `ivf_argmax(array<double>, array<struct<cell:int, cv:array<double>>>)
-  * -> int` — nearest-centroid cell as one codegen'd kernel call
-  * ([[VectorKernels.ivfArgmax]]); cosine fold, NaN sentinel and
-  * (−sim, cell) tie-break identical to the declarative fold it
-  * replaces (round 16). */
-case class IvfArgmaxCell(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types._
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "ivf_argmax"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(_: StructType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ivf_argmax requires (array<double>, array<struct>), got " +
-            s"${left.dataType.sql} / ${right.dataType.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.ivfArgmax(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.ivfArgmax($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `ivf_probes(array<double>, array<struct<cell:int, cv:array<double>>>)
-  * -> array<int>` — the nProbe nearest cells by (cosine desc, cell asc)
-  * as one codegen'd selection pass ([[VectorKernels.ivfProbeCells]]);
-  * replaces the interpreted per-row array_sort(transform(...)) + slice
-  * (round 17), restoring the NaN-first sentinel the r16 rewrite dropped. */
-case class IvfProbeCellsExpr(left: Expression, right: Expression,
-    nProbe: Int) extends BinaryExpression {
-  import org.apache.spark.sql.types._
-
-  require(nProbe >= 1, "nProbe must be >= 1")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "ivf_probes"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(_: StructType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ivf_probes requires (array<double>, array<struct>), got " +
-            s"${left.dataType.sql} / ${right.dataType.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.ivfProbeCells(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], nProbe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.ivfProbeCells($a, $b, $nProbe);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `sq8_dequant(array<double>, array<struct<pos:int, mn:double, mx:double>>)
-  * -> array<double>` — SQ8 quantize+dequantize as one codegen'd kernel
-  * call ([[VectorKernels.sq8Dequant]]); IEEE-identical to the declarative
-  * transform it replaces (round 17). */
-case class Sq8DequantExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types._
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "sq8_dequant"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(_: StructType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sq8_dequant requires (array<double>, array<struct>), got " +
-            s"${left.dataType.sql} / ${right.dataType.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.sq8Dequant(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.sq8Dequant($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `pq_reconstruct(array<double>, array<struct<sub:long, cws:array<struct>>>)
-  * -> array<double>` — whole-vector PQ reconstruction (slice + per-sub
-  * argmin + concat) as one codegen'd kernel call
-  * ([[VectorKernels.pqReconstruct]]); round 17. */
-case class PqReconstructExpr(left: Expression, right: Expression,
-    subDim: Int) extends BinaryExpression {
-  import org.apache.spark.sql.types._
-
-  require(subDim >= 1, "subDim must be >= 1")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "pq_reconstruct"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(_: StructType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_reconstruct requires (array<double>, array<struct>), got " +
-            s"${left.dataType.sql} / ${right.dataType.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.pqReconstruct(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], subDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.pqReconstruct($a, $b, $subDim);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}

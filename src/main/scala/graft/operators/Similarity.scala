@@ -338,11 +338,12 @@ object Similarity {
     * NaN-cosine cell loses everywhere, and an all-NaN row falls back to
     * the lowest cell id. No-op for non-degenerate input. */
   private def ivfAssign(points: DataFrame, cents: DataFrame): DataFrame =
-    // selection runs in the native [[graft.functions.IvfArgmaxCell]]
-    // kernel — identical cosine fold, NaN sentinel and (−sim, cell)
-    // tie-break as the declarative aggregate-fold form (asserted
-    // equal in VectorArgminSpec), one codegen'd loop per row instead
-    // of nCells interpreted lambda dispatches
+    // selection runs in the native
+    // [[graft.functions.VectorKernels.ivfArgmax]] kernel — identical
+    // cosine fold, NaN sentinel and (−sim, cell) tie-break as the
+    // declarative aggregate-fold form (asserted equal in
+    // VectorArgminSpec), one codegen'd loop per row instead of nCells
+    // interpreted lambda dispatches
     points.crossJoin(broadcast(centroidArray(cents)))
       .select(col("vec_id"), col("v"),
         graft.functions.VectorKernels.ivf_argmax(col("v"), col("cents"))
@@ -587,8 +588,8 @@ object Similarity {
       cb.groupBy(col("sub"))
         .agg(array_sort(collect_list(struct(col("code"), col("cw")))).as("cws"))
     // argmin by (dist asc, code asc) in the native
-    // [[graft.functions.PqArgminL2]] kernel — identical sequential-fold
-    // L2² and strict-less tie-break as the declarative
+    // [[graft.functions.VectorKernels.pqArgmin]] kernel — identical
+    // sequential-fold L2² and strict-less tie-break as the declarative
     // aggregate-of-zip_with form (asserted equal in VectorArgminSpec),
     // one codegen'd loop per row instead of ksub interpreted folds
     def bestOf(svc: Column, cws: Column): Column =
@@ -616,15 +617,12 @@ object Similarity {
     // old sort-by-sub collect. `cbs` is sub-dense (every sub has sampled
     // codewords) and sub-sorted, so element_at(cbs, i+1) is sub i.
     // NEGATIVE RESULT (round 17, kept declarative): replacing this
-    // transform chain with the one-pass native
-    // [[graft.functions.VectorKernels.pqReconstruct]] kernel measured
-    // sim_topk_pq / _refine / _refine_sampled 2× SLOWER (1.4 → 3.0 s) —
-    // the codegen-friendly kernel projection is inlined into the
-    // downstream ADC crossJoin and re-evaluated once per (query, vector)
-    // PAIR, while the interpreted higher-order-function chain stays a
-    // per-corpus-row Project below the join. The kernel (and its
-    // VectorArgminSpec equivalence tests) is kept for the ragged-dim
-    // contract it pins.
+    // transform chain with a one-pass native reconstruction kernel
+    // measured sim_topk_pq / _refine / _refine_sampled 2× SLOWER
+    // (1.4 → 3.0 s) — the codegen-friendly kernel projection is inlined
+    // into the downstream ADC crossJoin and re-evaluated once per
+    // (query, vector) PAIR, while the interpreted higher-order-function
+    // chain stays a per-corpus-row Project below the join.
     val cbn = cbArray(codebook)
       .groupBy()
       .agg(array_sort(collect_list(struct(col("sub"), col("cws")))).as("cbs"))

@@ -4,7 +4,8 @@
 #   - query/oracle counts from the registry itself (graft.tools.Coverage)
 #   - test/suite counts from a FRESH `sbt test` run (pass a saved log as
 #     $1 to reuse one instead of re-running the 7-minute suite)
-# Rewrites the block between the totals:begin/end markers in COVERAGE.md.
+# Rewrites the block between the totals:begin/end markers in COVERAGE.md
+# and the query/oracle/test counts in README.md's Status list.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -21,11 +22,11 @@ fi
 nt=$(grep -Eo 'Total number of tests run: [0-9]+' "$testlog" | tail -1 | grep -Eo '[0-9]+')
 ns=$(grep -Eo 'Suites: completed [0-9]+' "$testlog" | tail -1 | grep -Eo '[0-9]+')
 
-line="**Totals: ${nq} registered queries — ${no} ✓oracle, ${nro} rows-only; every oracle is a DuckDB hash-compare at sf0.01 (sketch/ANN queries pin exact counterparts plus error-contract booleans, see §2.9 notes). ${nt} ScalaTest tests (${ns} suites), all green. 5 native Catalyst expressions with codegen.**"
+line="**Totals: ${nq} registered queries — ${no} ✓oracle, ${nro} rows-only; every oracle is a DuckDB hash-compare at sf0.01 (sketch/ANN queries pin exact counterparts plus error-contract booleans, see §2.9 notes). ${nt} ScalaTest tests (${ns} suites), all green. 5 native Catalyst expressions with codegen (JsonGetScalar, CosineSimilarity, MinHashSignature, SimHashSignature, LshBucketBits) and 5 StaticInvoke-wired vector kernels (pq_argmin, ivf_argmax, ivf_probes, sq8_dequant, sorted_overlap).**"
 
-python3 - "$line" <<'EOF'
+python3 - "$line" "$nq" "$no" "$nt" <<'EOF'
 import re, sys
-line = sys.argv[1]
+line, nq, no, nt = sys.argv[1:]
 p = 'COVERAGE.md'
 s = open(p).read()
 new = re.sub(r'(<!-- totals:begin[^>]*-->\n).*?(\n<!-- totals:end -->)',
@@ -33,4 +34,13 @@ new = re.sub(r'(<!-- totals:begin[^>]*-->\n).*?(\n<!-- totals:end -->)',
 assert new != s or line in s, 'totals markers not found'
 open(p, 'w').write(new)
 print('COVERAGE.md totals header updated:', line[:80], '...')
+p = 'README.md'
+s = open(p).read()
+for pat, n in [(r'\*\*\d+ (\S+ queries\*\*)', rf'**{nq} \1'),
+               (r'\*\*all \d+ hash-match', f'**all {no} hash-match'),
+               (r'\*\*\d+ ScalaTest tests\*\*', f'**{nt} ScalaTest tests**')]:
+    s, k = re.subn(pat, n, s)
+    assert k == 1, f'README.md: expected one match for {pat}, found {k}'
+open(p, 'w').write(s)
+print(f'README.md Status counts updated: {nq} queries, {no} oracles, {nt} tests')
 EOF
