@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -367,6 +368,32 @@ class StreamingSpec extends GraftSparkSpec {
     val out = Behavior.fanoutMessages(wide)
     assert(out.schema.fieldNames.toSeq === Seq("topic", "value"))
     assert(out.schema.fields.forall(_.dataType.typeName == "string"))
+  }
+
+  // No Kafka connector ships with this engine's Spark build, so both Kafka
+  // paths must fail at definition time with Spark's "data source not
+  // found" error (S1/S3), before touching a broker.
+  private def assertKafkaNotFound(body: => Any): Unit = {
+    val e = intercept[AnalysisException](body)
+    assert(e.getCondition === "_LEGACY_ERROR_TEMP_1140")
+    assert(e.getMessage.contains("Failed to find data source: kafka"))
+  }
+
+  test("kafka source fails fast without a connector (S1)") {
+    assertKafkaNotFound(BehaviorStream.kafkaSource(spark, "localhost:1"))
+  }
+
+  test("kafka fan-out writer fails fast at start without a connector (S3)") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val input = MemoryStream[(Long, Long, String, String)]
+    val wide = input.toDF().toDF("event_id", "user_id", "event_type", "props")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-kafka-ckpt-").toString
+    val running = s.streams.active.length
+    assertKafkaNotFound(
+      BehaviorStream.kafkaFanoutWriter(wide, "localhost:1", ckpt).start())
+    assert(s.streams.active.length === running) // no query was started
   }
 
   test("streaming incremental agg: maintained partitioned table == batch " +
