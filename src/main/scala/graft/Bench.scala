@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: executes every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -75,30 +73,24 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE (default = cpus, the driver's config): the
+    // HEAP-SIZE IMMUNITY: Spark's ContextCleaner purges shuffle files /
+    // broadcasts / localCheckpoint RDDs from a GC reference queue, so a
+    // launcher that hands this JVM a huge heap (-Xmx96g) that never
+    // fills never GCs, the cleaner never fires, and 240 queries of
+    // accumulated state (7,800+ threads observed) crawl the back half of
+    // the run 10-90x. tools/run_main.sh bounds ITS heap to 8g, but
+    // graft.Bench is also launched directly — this periodic System.gc()
+    // (Spark's own knob, default 30min) makes the cleaner fire on any
+    // heap every 60s. A static conf, so it goes in as a system property
+    // the session's SparkConf reads (see Engine.session).
+    System.setProperty("spark.cleaner.periodicGC.interval", "60s")
+    val spark = Engine.session(appName = "graft-bench", cores = cpus.toInt)
+    // SPARK_GRAFT_SHUFFLE (default = cpus, Engine.session's): the
     // scaling sweeps run this binary at 10x data with shuffle partitions
     // scaled alongside — the knob every real deployment turns with data
     // size (SCALING.md §"Fixed-parallelism drift").
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      // HEAP-SIZE IMMUNITY (round 16): Spark's ContextCleaner purges
-      // shuffle files / broadcasts / localCheckpoint RDDs from a GC
-      // reference queue, so a launcher that hands this JVM a huge heap
-      // (-Xmx96g) that never fills never GCs, the cleaner never fires,
-      // and 240 queries of accumulated state (7,800+ threads observed,
-      // r15) crawl the back half of the run 10-90x. tools/run_main.sh
-      // bounds ITS heap to 8g, but the driver launches graft.Bench
-      // directly — this periodic System.gc() (Spark's own knob, default
-      // 30min) makes the cleaner fire on any heap every 60s.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
     val priorText = loadPriorFile()
     // parse failures degrade to an empty prior, never a startup crash —
     // update_prior.py writes BENCH_PRIOR.json non-atomically, and a
@@ -110,18 +102,10 @@ object Bench {
     val coldFloor =
       try BenchCore.parseColdFloor(priorText)
       catch { case _: Throwable => Map.empty[String, Double] }
-    // optional comma-separated name prefixes for local iteration
-    // (e.g. SPARK_GRAFT_ONLY=dd_,sim_); unset = full driver run.
-    // SPARK_GRAFT_SKIP excludes exact names — the scaling harness uses
-    // it to leave out the declared O(n²) oracle baselines whose blowup
-    // at 10× data is by design (each has a registered bucketed scale
-    // path that IS measured).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(',').toSet).getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) && !skip.contains(name)
-    }.sortBy(_._1)
+    // optional query filter for local iteration and the scaling sweeps
+    // (SparkEntry.selected); unset = every registered query.
+    val only = SparkEntry.onlyPrefixes
+    val selected = SparkEntry.selected()
     val fnByName = selected.toMap
     // internal deadline, kept under the driver's kill timeout so the
     // artifact always prints from inside the JVM (see scaladoc)

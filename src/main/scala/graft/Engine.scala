@@ -11,18 +11,28 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Recommended session for this engine (mirrors Bench/Verify config).
+  /** The engine's session: the only `SparkSession.builder` call in the
+    * repository. Bench, Verify, the tests, the tools and the benchmark
+    * harness all start here, so they plan under the same settings.
     *
-    * `rocksdbState = true` swaps streaming state to the RocksDB provider:
-    * state lives off-heap/on-disk per executor instead of in the JVM
-    * heap, which is what keeps long-horizon stateful queries (cumulative
-    * Complete-mode aggregates, wide dedup watermarks) viable when state
-    * outgrows executor memory — the 100 TB setting. Default stays on the
-    * in-memory HDFS-backed provider: at reference-shape state (≤48 topics
-    * × small value domains) it is strictly faster. */
-  def session(appName: String = "graft", cores: Int = 32,
-      rocksdbState: Boolean = false): SparkSession = {
-    val b = SparkSession.builder()
+    * A caller that needs more adds it around the call, not as a
+    * parameter. A runtime SQL conf is set on the returned session with
+    * `spark.conf.set` (Bench's shuffle override, PlanFingerprint's pinned
+    * planner confs). A static conf is set as a `spark.*` JVM system
+    * property just before the call: the builder's `SparkConf` reads those
+    * (Bench's `spark.cleaner.periodicGC.interval`, the test warehouse
+    * dir).
+    *
+    * Streaming state stays on the in-memory HDFS-backed provider, which
+    * is faster at reference-shape state (≤48 topics × small value
+    * domains). State that outgrows executor memory (long-horizon
+    * Complete-mode aggregates, wide dedup watermarks) switches to
+    * RocksDB, off-heap and on disk, with `spark.conf.set(
+    * "spark.sql.streaming.stateStore.providerClass",
+    * "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")`
+    * before the query starts, as the RocksDB specs do. */
+  def session(appName: String = "graft", cores: Int = 32): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -33,9 +43,7 @@ object Engine {
       // shingle-set sides off the shuffle (AQE demotes anything bigger).
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
-    if (rocksdbState) b.config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

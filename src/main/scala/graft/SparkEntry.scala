@@ -36,6 +36,24 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     families.foldLeft(Map.empty[String, (SparkSession, String) => DataFrame])(_ ++ _.queries)
 
+  /** `SPARK_GRAFT_ONLY`: comma-separated query-name prefixes for a local
+    * run over part of the registry; unset = every query. */
+  def onlyPrefixes: Option[Seq[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
+
+  /** The queries Bench and the scaling sweep run, sorted by name: those
+    * matching [[onlyPrefixes]], minus the exact names in
+    * `SPARK_GRAFT_SKIP` (comma-separated). The scaling sweeps skip the
+    * declared O(n²) oracle baselines, whose blowup at 10× data is by
+    * design (each has a registered bucketed scale path that IS measured). */
+  def selected(): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val skip = sys.env.get("SPARK_GRAFT_SKIP")
+      .map(_.split(',').toSet).getOrElse(Set.empty[String])
+    queries.toSeq.filter { case (name, _) =>
+      onlyPrefixes.forall(_.exists(name.startsWith)) && !skip(name)
+    }.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

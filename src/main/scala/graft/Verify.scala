@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.Future
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -79,7 +83,7 @@ object Verify {
     // optional comma-separated name prefixes for local iteration (same
     // contract as Bench); unset = full driver run. Filters BOTH the query
     // dumps and oracle_sql.json so tools/check.py sees a consistent pair.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
+    val only = SparkEntry.onlyPrefixes
     def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -134,23 +138,26 @@ object Verify {
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-    val tasks = SparkEntry.queries.filter(kv => keep(kv._1)).map {
-      case (name, fn) =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-                .parquet(s"$outDir/$name")
-              val s = (System.nanoTime() - t0) / 1e9
-              System.err.println(f"[verify] $name ok $s%.1fs")
-            } catch { case e: Throwable =>
-              System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            }
-            if (done.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
+    // one query's dump: build at `dataDir`, write one parquet part to
+    // `outDir/outName`, log ok/failed; every 32nd completion clears the cache
+    def dump(fn: (SparkSession, String) => DataFrame, dataDir: String,
+        outName: String): Future[_] =
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, dataDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$outName")
+            val s = (System.nanoTime() - t0) / 1e9
+            System.err.println(f"[verify] $outName ok $s%.1fs")
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $outName failed: ${e.getMessage}")
           }
-        })
-    }
+          if (done.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
+        }
+      })
+    val tasks = SparkEntry.queries.filter(kv => keep(kv._1))
+      .map { case (name, fn) => dump(fn, sfDir, name) }
     // Global deadline (3rd layer): a single wedged query (host stall, codegen
     // livelock) must not hold the artifact hostage past the driver's own
     // timeout — the driver SIGKILLs and records `{}`. On breach: cancel all
@@ -158,7 +165,7 @@ object Verify {
     // stragglers surface as per-query errors instead of a zeroed round.
     val deadlineS = sys.env.getOrElse("SPARK_GRAFT_VERIFY_DEADLINE_S", "2700").toLong
     val deadlineNs = System.nanoTime() + deadlineS * 1000000000L
-    def awaitAll(ts: Iterable[java.util.concurrent.Future[_]]): Boolean =
+    def awaitAll(ts: Iterable[Future[_]]): Boolean =
       ts.exists { t =>
         val leftMs = (deadlineNs - System.nanoTime()) / 1000000L
         try { t.get(math.max(leftMs, 1L), java.util.concurrent.TimeUnit.MILLISECONDS); false }
@@ -171,22 +178,8 @@ object Verify {
     if (!timedOut && spotNames.nonEmpty) {
       System.err.println(s"[verify] sf01 spot slice (${spotNames.size}): " +
         spotNames.mkString(", "))
-      val spotTasks = spotNames.map { name =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val t0 = System.nanoTime()
-            try {
-              SparkEntry.queries(name)(spark, sf01Dir).coalesce(1)
-                .write.mode("overwrite").parquet(s"$outDir/sf01_spot_$name")
-              val s = (System.nanoTime() - t0) / 1e9
-              System.err.println(f"[verify] sf01_spot_$name ok $s%.1fs")
-            } catch { case e: Throwable =>
-              System.err.println(s"[verify] sf01_spot_$name failed: ${e.getMessage}")
-            }
-            if (done.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
-          }
-        })
-      }
+      val spotTasks = spotNames.map(name =>
+        dump(SparkEntry.queries(name), sf01Dir, s"sf01_spot_$name"))
       timedOut = awaitAll(spotTasks)
     }
     if (timedOut) {

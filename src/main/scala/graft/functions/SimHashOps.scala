@@ -3,11 +3,11 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** One-pass SimHash signature kernel.
   *
@@ -31,7 +31,8 @@ object SimHashKernel {
     v >>> 4
   }
 
-  def signature(sh: ArrayData, bits: Int, useMd5: Boolean): Any = {
+  /** The `bits`-bit signature of one shingle array; null when it is empty. */
+  def signature(sh: ArrayData, bits: Int, useMd5: Boolean): java.lang.Long = {
     val n = sh.numElements()
     if (n == 0) return null
     val md = if (useMd5) MessageDigest.getInstance("MD5") else null
@@ -52,34 +53,17 @@ object SimHashKernel {
     var sig = 0L
     var j = 0
     while (j < bits) { if (w(j) > 0) sig |= (1L << j); j += 1 }
-    sig
+    java.lang.Long.valueOf(sig)
   }
 
-  def simhashSignature(shingles: Column, bits: Int, useMd5: Boolean): Column =
-    Bridge.column(SimHashSignature(Bridge.expression(shingles), bits, useMd5))
-}
-
-/** `simhash_signature(array<string>) -> long` (codegen; null on empty). */
-case class SimHashSignature(child: Expression, bits: Int, useMd5: Boolean)
-    extends UnaryExpression {
-
-  require(bits > 0 && bits <= 64)
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashKernel.signature(input.asInstanceOf[ArrayData], bits, useMd5)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |Object sigObj = graft.functions.SimHashKernel.signature($c, $bits, $useMd5);
-         |if (sigObj == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) sigObj).longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** `simhash_signature(array<string>) -> long`, null on an empty array,
+    * as a Catalyst `StaticInvoke`: codegen emits the direct static call
+    * to [[signature]], the interpreted path finds it by reflection, and a
+    * null array gives a null result without calling it. */
+  def simhashSignature(shingles: Column, bits: Int, useMd5: Boolean): Column = {
+    require(bits > 0 && bits <= 64)
+    Bridge.column(StaticInvoke(getClass, LongType, "signature",
+      Seq(Bridge.expression(shingles), Literal(bits), Literal(useMd5)),
+      propagateNull = true, returnNullable = true))
+  }
 }

@@ -3,9 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Engine, SparkEntry}
 
 /** Scratch diagnostic (not part of the driver contract): run named
   * SparkEntry queries and report the NUMBER OF SPARK JOBS each submits —
@@ -18,15 +17,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(cores = 32)
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =

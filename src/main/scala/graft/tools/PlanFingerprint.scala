@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-import graft.SparkEntry
+import graft.{Engine, SparkEntry}
 
 /** Operator-multiset plan fingerprints for EVERY registered query — the
   * whole-registry extension of PlanSpec's 16 hand-pinned shapes: a golden
@@ -267,12 +267,7 @@ object PlanFingerprint {
     val sfDir = positional.headOption.getOrElse(
       if (sf01Mode) "/root/testdata/sf0.1" else "/root/testdata/sf0.001")
     val out = positional.lift(1).getOrElse(if (sf01Mode) goldenPathSf01 else goldenPath)
-    val spark = SparkSession.builder()
-      .master(if (sf01Mode) "local[32]" else "local[8]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(cores = if (sf01Mode) 32 else 8)
     if (only.nonEmpty) {
       // Determinism probe: excludedSf01 is deliberately NOT honored here —
       // probing an excluded query is exactly how its exclusion evidence

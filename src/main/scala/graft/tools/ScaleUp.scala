@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Engine
 
 /** Local scale-up generator: replicate the driver's sf0.1 testdata
   * `factor`× into a new directory, for measuring per-query scaling
@@ -50,13 +52,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val factor = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(cores = 32)
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

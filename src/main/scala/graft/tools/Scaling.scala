@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Engine, SparkEntry}
 
 /** Scale-proof measurement harness: one timed `count()` per query at a
   * given data directory, printed as `name<TAB>seconds`. Used with
@@ -18,38 +16,27 @@ import graft.SparkEntry
   * Ratios are read against the SAME session/config at the smaller SF
   * (also measured here when asked), not against Bench artifacts.
   *
-  * `SPARK_GRAFT_ONLY` / `SPARK_GRAFT_SKIP` filter as in Bench; a
-  * per-query wall cap (`SPARK_GRAFT_QUERY_CAP_S`, default 300) marks a
-  * blown-up query `TIMEOUT` and moves on instead of wedging the sweep —
-  * a superlinear outlier should become a report line, not a lost run. */
+  * `SPARK_GRAFT_ONLY` / `SPARK_GRAFT_SKIP` filter as in Bench
+  * ([[SparkEntry.selected]]); a per-query wall cap
+  * (`SPARK_GRAFT_QUERY_CAP_S`, default 300) marks a blown-up query
+  * `TIMEOUT` and moves on instead of wedging the sweep — a superlinear
+  * outlier should become a report line, not a lost run. */
 object Scaling {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Engine.session(cores = cpus.toInt)
     // SPARK_GRAFT_SHUFFLE decouples shuffle parallelism from the core
     // count for the cluster-sizing experiment (SCALING.md §Parallelism):
     // same cores, more/smaller shuffle partitions — if a flagged query's
     // superlinear drift melts, it was per-partition working-set pressure
     // (the knob a real cluster turns with data size), not operator cost.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(',').toSet).getOrElse(Set.empty[String])
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
     val capS = sys.env.get("SPARK_GRAFT_QUERY_CAP_S")
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(300.0)
-    val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) && !skip.contains(name)
-    }.sortBy(_._1)
+    val selected = SparkEntry.selected()
 
     val pool = java.util.concurrent.Executors.newCachedThreadPool()
     selected.foreach { case (name, fn) =>

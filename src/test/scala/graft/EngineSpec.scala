@@ -25,4 +25,20 @@ class EngineSpec extends GraftSparkSpec {
       .head().getString(0)
     assert(k != null && k.forall(_.isDigit))
   }
+
+  test("Engine.session is the only SparkSession builder in the sources") {
+    // split so this file does not match itself
+    val needle = "SparkSession" + ".builder"
+    val roots = Seq("src", "perfbench/src").map(new java.io.File(_))
+    assert(roots.forall(_.isDirectory), "run from the repository root")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Seq.empty
+    val builders = roots.flatMap(scalaFiles).filter { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      text.contains(needle)
+    }.map(_.getPath)
+    assert(builders === Seq("src/main/scala/graft/Engine.scala"))
+  }
 }

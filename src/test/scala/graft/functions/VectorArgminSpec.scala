@@ -12,30 +12,14 @@ import graft.GraftSparkSpec
   * id) tie-break, same NaN sentinel — or the oracle's bit-exact
   * Lloyd/assignment replicas break. This spec pins kernel == declarative
   * form on random data, exact ties, and the zero-norm NaN guard; every
-  * comparison runs on both evaluation paths ([[onBothPaths]]) and a null
-  * input gives a null output. */
+  * comparison runs on both evaluation paths
+  * ([[graft.GraftSparkSpec.onBothPaths]]) and a null input gives a null
+  * output. */
 class VectorArgminSpec extends GraftSparkSpec {
 
   private val rnd = new scala.util.Random(13)
 
   private def vec(dim: Int): Seq[Double] = Seq.fill(dim)(rnd.nextGaussian())
-
-  /** Runs `check` under whole-stage codegen, then again with codegen off
-    * everywhere: the kernels are `StaticInvoke` calls, whose interpreted
-    * path finds the kernel method by reflection instead of compiling a
-    * direct call. */
-  private def onBothPaths(check: => Unit): Unit = {
-    check
-    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prev = off.map { case (k, _) => k -> spark.conf.getOption(k) }
-    off.foreach { case (k, v) => spark.conf.set(k, v) }
-    try check
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("pq_argmin == declarative aggregate fold on random codebooks") {
     import spark.implicits._
