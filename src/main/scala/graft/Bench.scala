@@ -166,12 +166,12 @@ object Bench {
       () => System.nanoTime(),
       wallBudgetS,
       prior,
-      // release per-query cache() blocks (dedup operators) so runs
-      // don't accumulate; each pass's warmup repopulates them, keeping
-      // every timed run warm-cache (the methodology of every prior
-      // round's artifact; cold timings measured ~4x higher on the
-      // cache-heavy dd_ queries and are not comparable)
-      afterEach = () => spark.catalog.clearCache(),
+      // one cache scope per visit: the warmup fills the operator caches
+      // the timed runs then read, keeping every timed run warm-cache
+      // (the methodology of every prior round's artifact; cold timings
+      // measured ~4x higher on the cache-heavy dd_ queries and are not
+      // comparable), and the visit's storage is released when it ends
+      visit = body => graft.operators.CacheScope.scoped(body()),
       // e2e streaming queries (gov_*) replay their whole stream from
       // batch 0 every run — a warmup is a wasted third replay
       noWarmup = SparkEntry.noWarmupQueries,

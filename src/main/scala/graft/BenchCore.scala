@@ -64,7 +64,10 @@ private[graft] object BenchCore {
     *                 artifact is flagged partial
     * @param prior    prior-round per-query seconds (3x-regression retry
     *                 trigger)
-    * @param afterEach cleanup after every query (cache release)
+    * @param visit    runs one visit (a query's warmup and its timed runs)
+    *                 — Bench wraps it in one `CacheScope.scoped`, so the
+    *                 warmup fills the caches the timed runs read and the
+    *                 visit's storage is released when it ends
     * @param noWarmup queries for which the per-visit warmup run is pure
     *                 waste and is always skipped (round 15): the e2e
     *                 streaming queries (`gov_*`) clear their scratch and
@@ -92,7 +95,7 @@ private[graft] object BenchCore {
       nowNanos: () => Long,
       budgetS: Double,
       prior: Map[String, Double],
-      afterEach: () => Unit = () => (),
+      visit: (() => Unit) => Unit = body => body(),
       noWarmup: Set[String] = Set.empty,
       coldPrior: Map[String, Double] = Map.empty) {
 
@@ -167,14 +170,15 @@ private[graft] object BenchCore {
       *                                   first, spending only LEFTOVER
       *                                   budget.
       *
-      * The warmup each visit repopulates the per-query caches that
-      * `afterEach` released, so every timed run is warm-cache.
+      * Each visit's warmup fills the per-query caches its timed runs
+      * read (one `visit` call spans both), so every timed run is
+      * warm-cache.
       */
     def runPass(pass: Int): Unit = {
       val order = if (pass == 0) selected else selected.reverse
       for ((name, i) <- order.zipWithIndex) {
         if (overBudget) truncated = true
-        else try {
+        else try visit { () =>
           if (!degraded && !noWarmup(name))
             runQuery(name) // warmup: codegen + JIT + cache fill
           val s = nowNanos()
@@ -203,7 +207,6 @@ private[graft] object BenchCore {
         } catch {
           case e: Throwable => errors.getOrElseUpdate(name, errMsg(e))
         }
-        finally afterEach()
         // contention projection (pass 0 only, while still warm-mode):
         // observed slowdown vs prior over the queries visited so far,
         // extrapolated over the rest at warm+timed (2 runs) cost.
@@ -268,9 +271,9 @@ private[graft] object BenchCore {
       }
       for (name <- ranked) {
         if (overBudget) truncated = true
-        else try {
+        else try visit { () =>
           if (!degraded && !noWarmup(name))
-            runQuery(name) // warmup refill (afterEach released the caches)
+            runQuery(name) // warmup refill (the last visit's caches are gone)
           var extra = 0
           while (suspect(name) && extra < maxExtra && !overBudget) {
             val s = nowNanos()
@@ -281,7 +284,6 @@ private[graft] object BenchCore {
         } catch {
           case e: Throwable => errors.getOrElseUpdate(name, errMsg(e))
         }
-        finally afterEach()
       }
     }
 

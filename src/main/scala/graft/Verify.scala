@@ -2,7 +2,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Future
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.CacheScope
+import graft.queries.QueryFamily
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,9 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      measured 784 s on an idle host, uncomfortably close to a driver
   *      timeout once contention doubles it. Spark actions are thread-safe;
   *      each query writes its own output dir, so results are unchanged.
-  *      Cache hygiene: `clearCache()` every 32 completions (not per-query
-  *      — a concurrent clear only costs a recompute, never correctness)
-  *      keeps dedup-family `cache()` blocks from accumulating. */
+  *      Cache hygiene: each dump runs in its own `CacheScope.scoped`, so
+  *      a query's operator caches and checkpoints are freed when its
+  *      write finishes, and no thread clears another's storage. */
 object Verify {
 
   /** Oracle tables (the driver registers a DuckDB view per name over the
@@ -136,24 +141,29 @@ object Verify {
       case None => Files.deleteIfExists(marker)
     }
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt
-    val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-    // one query's dump: build at `dataDir`, write one parquet part to
-    // `outDir/outName`, log ok/failed; every 32nd completion clears the cache
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // one query's dump: build at `dataDir` and write one parquet part to
+    // `outDir/outName` inside one cache scope, log ok/failed. A failed
+    // dump deletes its dir, so the compare reports the query as having
+    // no output instead of scoring an empty or partial write.
     def dump(fn: (SparkSession, String) => DataFrame, dataDir: String,
         outName: String): Future[_] =
       pool.submit(new Runnable {
         def run(): Unit = {
           val t0 = System.nanoTime()
           try {
-            fn(spark, dataDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$outName")
+            CacheScope.scoped {
+              fn(spark, dataDir).coalesce(1).write.mode("overwrite")
+                .parquet(s"$outDir/$outName")
+            }
             val s = (System.nanoTime() - t0) / 1e9
             System.err.println(f"[verify] $outName ok $s%.1fs")
           } catch { case e: Throwable =>
             System.err.println(s"[verify] $outName failed: ${e.getMessage}")
+            failed.add(outName)
+            QueryFamily.clearScratch(s"$outDir/$outName")
           }
-          if (done.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
         }
       })
     val tasks = SparkEntry.queries.filter(kv => keep(kv._1))
@@ -172,6 +182,7 @@ object Verify {
         catch { case _: java.util.concurrent.TimeoutException => true }
       }
     var timedOut = awaitAll(tasks)
+    var attempted = tasks.size
     // PHASE 2 (strictly after phase 1 — a scratch-stateful query must
     // never run at two SFs concurrently): the rotation slice at sf0.1,
     // dumped under the sf01_spot_ prefix, inside the same global deadline.
@@ -181,7 +192,10 @@ object Verify {
       val spotTasks = spotNames.map(name =>
         dump(SparkEntry.queries(name), sf01Dir, s"sf01_spot_$name"))
       timedOut = awaitAll(spotTasks)
+      attempted += spotTasks.size
     }
+    System.err.println(s"[verify] failed ${failed.size} of $attempted: " +
+      failed.asScala.toSeq.sorted.mkString(", "))
     if (timedOut) {
       System.err.println(s"[verify] DEADLINE ${deadlineS}s breached — cancelling stragglers")
       spark.sparkContext.cancelAllJobs()

@@ -1,56 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Bounded lifetime for the intermediate caches the dedup operators create.
+/** The one owner of engine-created storage lifetime.
   *
-  * The pair operators ([[Dedup.jaccardPairsExact]], [[Dedup.ppjoinPairs]],
-  * [[Dedup.containmentPairs]], [[Dedup.minhashPairs]],
-  * [[Dedup.simhashPairs]]) cache a multi-consumer intermediate (the shingle
-  * sets / signatures) — load-bearing for performance (3-8× measured), but by
-  * default those blocks live until someone calls
-  * `spark.catalog.clearCache()`. A long-lived library caller that invokes
-  * operators repeatedly would accumulate cached blocks for the session
-  * lifetime (they are LRU-evicted under memory pressure, so this is a
-  * hygiene concern, not a correctness one).
-  *
-  * Passing an explicit scope bounds that lifetime with the loan pattern:
+  * Operators cache multi-consumer intermediates (shingle sets, signatures,
+  * edge lists — load-bearing for performance, 3-8× measured) and
+  * `localCheckpoint` iterative state. They never decide when that storage
+  * is freed: they hand it to [[CacheScope.track]] / [[CacheScope.onRelease]],
+  * which record it in the ambient scope, and the caller that owns the
+  * action bounds the lifetime with [[CacheScope.scoped]] — the only public
+  * API:
   *
   * {{{
-  * val n = CacheScope.using(s => Dedup.ppjoinPairs(docs, 0.8, s)) { pairs =>
-  *   pairs.count() // caches live exactly for the duration of this block
-  * }
+  * CacheScope.scoped {
+  *   SparkEntry.queries("dd_ppjoin")(spark, dir).collect()
+  * } // every cache and checkpoint the query created is released here
   * }}}
   *
-  * After `using` returns, every cache the operator created has been
-  * unpersisted — nothing outlives the invocation.
+  * Ambient semantics:
+  *   - the scope is thread-scoped (a `DynamicVariable`): plans built on
+  *     other threads see their own ambient, so concurrent callers each
+  *     wrap their own build-plus-action;
+  *   - a thread started inside `scoped` inherits the scope — so a stream
+  *     started inside the block records its `foreachBatch` caches there,
+  *     and they are released with the block (stop the stream first);
+  *   - outside any `scoped` block nothing is recorded: operators cache
+  *     and nothing releases, exactly like a plain `.cache()`.
+  *
+  * `body` must CONSUME its DataFrames (run the action inside the block);
+  * a frame escaping the block silently recomputes uncached, and one that
+  * reads a released checkpoint fails loudly. Callers never clear the
+  * whole session's cache: that drops caches a concurrent scope is still
+  * reading, and it cannot free checkpoint blocks anyway.
   */
-final class CacheScope private[operators] (managed: Boolean) {
+final class CacheScope private {
 
-  def this() = this(managed = true)
-
-  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val tracked = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
   private val hooks = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  /** Cache `df` and, if this scope is managed, remember it for release. */
-  private[graft] def track(df: DataFrame): DataFrame = {
-    df.cache()
-    if (managed) synchronized { tracked += df }
-    df
-  }
-
-  /** Register a release action for storage `.cache()` cannot express
-    * (e.g. the persisted blocks behind a `localCheckpoint`, which
-    * `Dataset.unpersist`/`catalog.clearCache` never free). No-op in an
-    * unmanaged scope, mirroring [[track]]. NOTE: unlike an unpersisted
-    * cache (which silently recomputes), a released checkpoint cannot be
-    * recomputed — using the result after release fails loudly. */
-  private[graft] def onRelease(f: () => Unit): Unit =
-    if (managed) synchronized { hooks += f }
 
   /** Unpersist every tracked cache (non-blocking), run every release
     * hook, and forget both. */
-  def release(): Unit = synchronized {
+  private def release(): Unit = synchronized {
     tracked.foreach(_.unpersist(blocking = false))
     tracked.clear()
     hooks.foreach(f => f())
@@ -60,53 +51,41 @@ final class CacheScope private[operators] (managed: Boolean) {
 
 object CacheScope {
 
-  /** The session-lifetime scope: caches are created but never released by
-    * the operator — identical to a plain `.cache()` (the driver's
-    * Verify/Bench loops clear between queries). This is what [[ambient]]
-    * resolves to outside any [[scoped]] block. */
-  val unmanaged: CacheScope = new CacheScope(managed = false)
+  private val ambient = new scala.util.DynamicVariable[Option[CacheScope]](None)
 
-  private val ambientVar =
-    new scala.util.DynamicVariable[CacheScope](unmanaged)
-
-  /** The scope an operator picks up when its caller passes none — the
-    * innermost enclosing [[scoped]] block's managed scope, or [[unmanaged]]
-    * outside any block. This is how pre-built query closures whose
-    * signature has no scope parameter (the `SparkEntry.queries` registry:
-    * `(SparkSession, dir) => DataFrame`) still get bounded cache lifetimes:
-    * the library caller wraps build-plus-action in `CacheScope.scoped`,
-    * and every operator the registry entry invokes routes its caches
-    * through that scope. */
-  def ambient: CacheScope = ambientVar.value
-
-  /** Loan pattern: build an operator plan that caches through a fresh
-    * scope, hand it to `use`, and release all operator-created caches when
-    * `use` finishes — whether it returns or throws. The DataFrame must not
-    * escape `use` (its caches are gone afterwards; the plan would silently
-    * recompute uncached). */
-  def using[A](build: CacheScope => DataFrame)(use: DataFrame => A): A = {
-    val scope = new CacheScope
-    try use(build(scope)) finally scope.release()
+  /** Cache `ds` and record it in the ambient scope (if any) for release. */
+  private[graft] def track[T](ds: Dataset[T]): Dataset[T] = {
+    ds.cache()
+    ambient.value.foreach(s => s.synchronized { s.tracked += ds })
+    ds
   }
 
-  /** Ambient loan pattern for plans built by code you don't control the
-    * signature of (e.g. the `SparkEntry.queries` registry). Every operator
-    * invoked while `body` runs — on this thread — defaults to one fresh
-    * managed scope, and every cache those operators created is released
-    * when `body` finishes, whether it returns or throws:
-    *
-    * {{{
-    * CacheScope.scoped {
-    *   SparkEntry.queries("dd_ppjoin")(spark, dir).count()
-    * } // all operator caches released here
-    * }}}
-    *
-    * `body` must CONSUME its DataFrames (run the action inside the
-    * block); a frame escaping the block would silently recompute
-    * uncached. Thread-scoped (DynamicVariable): plans built on other
-    * threads see their own ambient. */
+  /** Register a release action in the ambient scope (if any) for storage
+    * `.cache()` cannot express — e.g. [[releaseCheckpoint]] for the
+    * blocks behind a `localCheckpoint`. Unlike an unpersisted cache
+    * (which silently recomputes), a released checkpoint cannot be
+    * recomputed: using the result after release fails loudly. */
+  private[graft] def onRelease(f: () => Unit): Unit =
+    ambient.value.foreach(s => s.synchronized { s.hooks += f })
+
+  /** Free the persisted RDD behind a `localCheckpoint`ed Dataset (its
+    * analyzed plan is a `LogicalRDD` leaf over the checkpoint blocks).
+    * Those blocks are invisible to `Dataset.unpersist` and to clearing
+    * the session's cache; without an explicit release they live until
+    * JVM garbage collection notices the RDD object, which on a large
+    * heap can be never. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** Run `body` with a fresh ambient scope and release everything the
+    * operators it invoked tracked in that scope when `body` finishes,
+    * whether it returns or throws. */
   def scoped[A](body: => A): A = {
     val scope = new CacheScope
-    try ambientVar.withValue(scope)(body) finally scope.release()
+    try ambient.withValue(Some(scope))(body) finally scope.release()
   }
 }

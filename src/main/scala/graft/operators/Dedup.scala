@@ -81,8 +81,7 @@ object Dedup {
     *      label (unpaired documents are their own cluster and survive).
     * Nothing in the pass is all-pairs, and every shuffle is keyed
     * (content hash / shingle id / vertex id). */
-  def dedupCorpus(docs: DataFrame, threshold: Double,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def dedupCorpus(docs: DataFrame, threshold: Double): DataFrame = {
     // Survivor restriction as an ANTI-join against the exact-dup LOSERS
     // (group rows minus the kept min id) rather than an inner join with
     // the keep set: the loser side is the duplicated mass only — orders
@@ -94,16 +93,16 @@ object Dedup {
     // cached: the (id, fingerprint) projection is consumed by both sides
     // of the keeper join — without it the corpus text is scanned and
     // hashed twice just for the exact stage
-    val ids = scope.track(docs.select(col("doc_id"), md5(col("text")).as("fp")))
-    val exactLosers = scope.track(
+    val ids = CacheScope.track(docs.select(col("doc_id"), md5(col("text")).as("fp")))
+    val exactLosers = CacheScope.track(
       ids.join(ids.groupBy(col("fp")).agg(min(col("doc_id")).as("keep")),
         Seq("fp"))
         .filter(col("doc_id") =!= col("keep"))
         .select(col("doc_id")))
     val survivors = docs.join(exactLosers, Seq("doc_id"), "left_anti")
-    val pairs = ppjoinPairs(survivors, threshold, scope)
+    val pairs = ppjoinPairs(survivors, threshold)
       .select(col("doc_a"), col("doc_b"))
-    val nearDupVictims = Graph.connectedComponents(pairs, scope = scope)
+    val nearDupVictims = Graph.connectedComponents(pairs)
       .filter(col("id") =!= col("cc"))
       .select(col("id").as("doc_id"))
     survivors.select(col("doc_id"))
@@ -126,15 +125,14 @@ object Dedup {
     * heavy-tail corpora with near-universal shingles: there use
     * [[ppjoinPairs]] (prefix+position filtered, still exact) or
     * [[minhashPairs]] (the 100 TB sketch path). */
-  def jaccardPairsExact(docs: DataFrame, threshold: Double,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def jaccardPairsExact(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0, "count-sharing join requires a positive threshold")
     val sh = shingleSets(docs)
     // cache() is LOAD-BEARING: the self-join scans occ twice, and without
     // it Catalyst pushes inferred not-null join-key filters below the
     // Generate, re-evaluating the full shingle transform ~3x per row per
     // side (measured ~8x slower end-to-end).
-    val occ = scope.track(
+    val occ = CacheScope.track(
       sh.select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("s")))
     // 1e-9 slack keeps the double-arithmetic bound conservative (never
     // drops a boundary pair; at worst admits one extra candidate row).
@@ -171,10 +169,9 @@ object Dedup {
     * unfiltered count-sharing join degenerates and the prefix filter is
     * load-bearing. Survivors are exact-verified per pair on the shingle
     * arrays (candidates ≪ corpus, so the verify join is cheap). */
-  def containmentPairs(docs: DataFrame, threshold: Double,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "containment threshold in (0, 1]")
-    val sh = scope.track(shingleSets(docs)) // 4 downstream scans: occ (feeding freq + the ordered join) and the 2 verify joins
+    val sh = CacheScope.track(shingleSets(docs)) // 4 downstream scans: occ (feeding freq + the ordered join) and the 2 verify joins
     // dictionary-encoded occurrence table (see ppjoinPairs: same id scheme,
     // same exact-recall argument) — the frequency table, ordered lists and
     // the prefix×full candidate join all carry fixed-width longs instead of
@@ -188,7 +185,7 @@ object Dedup {
     // one document has no cross-document join partner, so the filter
     // shrinks the shuffled explode volume with zero recall loss (n still
     // counts ALL elements; only the join inputs shrink).
-    val ordered = scope.track(occ.join(freq, Seq("h"))
+    val ordered = CacheScope.track(occ.join(freq, Seq("h"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("os"))
       .select(col("doc_id"), size(col("os")).as("n"), col("os")))
@@ -273,10 +270,9 @@ object Dedup {
     * Survivors are verified with the exact array jaccard (the shingle-set
     * side stays broadcast-eligible; at corpus scale AQE demotes it to a
     * shuffle join keyed on doc_id). */
-  def ppjoinPairs(docs: DataFrame, threshold: Double,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def ppjoinPairs(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold < 1, "prefix filter needs 0 < t < 1")
-    val sh = scope.track(shingleSets(docs)) // multi-consumer plan: cached blocks are LRU-evicted under pressure, and re-shingling per consumer measured 3-8x slower
+    val sh = CacheScope.track(shingleSets(docs)) // multi-consumer plan: cached blocks are LRU-evicted under pressure, and re-shingling per consumer measured 3-8x slower
     // Dictionary-encode shingles to 64-bit ids BEFORE anything shuffles:
     // the frequency table, the df-ordered prefix index and the candidate
     // self-join all carry fixed-width longs instead of trigram strings
@@ -291,7 +287,7 @@ object Dedup {
     val freq = occ.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // cached: the candidate self-join scans the prefix index twice
     // (without it the occ+freq join+groupBy+slice pipeline runs twice)
-    val prefix = scope.track(occ.join(freq, Seq("h"))
+    val prefix = CacheScope.track(occ.join(freq, Seq("h"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("os"))
       .select(col("doc_id"), size(col("os")).as("n"),
@@ -356,13 +352,12 @@ object Dedup {
 
   /** MinHash-LSH near-dup pairs, exact-verified: sketch recall, exact
     * precision. */
-  def minhashPairs(docs: DataFrame, threshold: Double,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
-    val sh = scope.track(shingleSets(docs)) // multi-consumer plan: cached blocks are LRU-evicted under pressure, and re-shingling 3x per query measured 3-8x slower
+  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
+    val sh = CacheScope.track(shingleSets(docs)) // multi-consumer plan: cached blocks are LRU-evicted under pressure, and re-shingling 3x per query measured 3-8x slower
     // signature cached: the band self-join scans its derivation twice, and
     // the 128-hash minhash kernel is the expensive half of this operator
     // (bandTable itself is a cheap 32-slice re-derivation per scan)
-    val sig = scope.track(minhashSignature(sh))
+    val sig = CacheScope.track(minhashSignature(sh))
     verifyPairs(minhashCandidates(sig), sh, threshold)
   }
 
@@ -389,12 +384,11 @@ object Dedup {
     * within hamming 3 shares at least one exact chunk, so blocking recall
     * is exact for the hamming ball. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      portable: Boolean = false,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+      portable: Boolean = false): DataFrame = {
     require(maxHamming <= 3, "4-chunk pigeonhole covers hamming <= 3")
     val chunkBits = if (portable) 15 else 16
     val chunkMask = (1L << chunkBits) - 1
-    val sig = scope.track(simhashSignature(shingleSets(docs), portable)) // 3 consumers (chunks + 2 verify joins)
+    val sig = CacheScope.track(simhashSignature(shingleSets(docs), portable)) // 3 consumers (chunks + 2 verify joins)
     val chunkCols = (0 until 4).map { c =>
       struct(lit(c).as("chunk"),
         shiftright(col("sig"), c * chunkBits).bitwiseAND(chunkMask).as("cval"))
@@ -475,8 +469,7 @@ object Dedup {
     * such boilerplate; max df is single digits) so the oracle stays an
     * exact mirror. */
   def winnowingPairs(docs: DataFrame, k: Int = 3, w: Int = 4,
-      minShared: Int = 2,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+      minShared: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = TextOps.tokens(col("text"))
     val kgrams = docs
@@ -500,7 +493,7 @@ object Dedup {
     val key = col("h") * lit(8388608L) + (lit(8388607L) - col("pos"))
     val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.currentRow, w - 1)
-    val fps = scope.track(kgrams
+    val fps = CacheScope.track(kgrams
       .withColumn("selkey", min(key).over(win))
       .withColumn("mx", max(col("pos")).over(Window.partitionBy(col("doc_id"))))
       .filter(col("pos") <= col("mx") - (w - 1)) // complete windows only
@@ -564,14 +557,13 @@ object Dedup {
     * stream, not a build-side hash map — no df cap needed, unlike
     * [[winnowingPairs]]' pair join, because coverage never materializes
     * pairs (Σ df, not Σ df²). */
-  def exactSubstrCoverage(docs: DataFrame, L: Int = 16,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def exactSubstrCoverage(docs: DataFrame, L: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = TextOps.tokens(col("text"))
     // cached: the shingle stream feeds BOTH the recurrence agg and the
     // probe side of the join back — without the cache the md5-per-window
     // generate (the dominant cost) runs twice
-    val sh = scope.track(docs
+    val sh = CacheScope.track(docs
       .select(col("doc_id"), size(toks).cast("long").as("n_tokens"),
         posexplode(when(size(toks) >= L,
           transform(sequence(lit(0), size(toks) - L),

@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  import CacheScope.releaseCheckpoint
+
   /** Rounds-to-fixed-point of the most recent invocation of each
     * convergence-iterated operator (diagnostic only — written at the end
     * of each call, read+cleared by the scaling sweep's
@@ -41,18 +43,6 @@ object Graph {
     m.clear()
     s
   }
-
-  /** The persisted RDD behind a `localCheckpoint`ed Dataset (its analyzed
-    * plan is a `LogicalRDD` leaf over the checkpoint blocks). Those blocks
-    * are invisible to `Dataset.unpersist`/`catalog.clearCache` — without
-    * an explicit release they live until JVM garbage collection notices
-    * the RDD object, which on a large heap can be never. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Connected components by iterative min-label propagation.
     *
@@ -85,8 +75,7 @@ object Graph {
     * the in-block duplicate subtrees of the pointer-jump self-join are
     * not fully deduped by exchange reuse — so rounds stay
     * checkpoint-per-round.) */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val cols = edges.columns
     require(cols.length >= 2, "edge list needs (src, dst) columns")
     val e = edges.select(col(cols(0)).as("src"), col(cols(1)).as("dst"))
@@ -136,9 +125,9 @@ object Graph {
     }
     releaseCheckpoint(sym) // only the loop read the symmetrized edges
     // the FINAL round's blocks back the returned frame — their lifetime
-    // belongs to the caller's scope (unmanaged: until GC, as before)
+    // belongs to the ambient scope (outside one: until GC, as before)
     val finalCkpt = liveCkpt
-    scope.onRelease(() => releaseCheckpoint(finalCkpt))
+    CacheScope.onRelease(() => releaseCheckpoint(finalCkpt))
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connectedComponents hit maxIter=$maxIter without converging; " +
@@ -150,9 +139,8 @@ object Graph {
   /** Dup-pair clustering: near-dup pairs → (doc_id, cc) cluster labels
     * with cluster sizes. Docs not in any pair are not listed (they are
     * their own singleton cluster by definition). */
-  def dupClusters(pairs: DataFrame,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
-    val cc = connectedComponents(pairs, scope = scope)
+  def dupClusters(pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(pairs)
     val sizes = cc.groupBy(col("cc")).agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, Seq("cc"))
       .select(col("id").as("doc_id"), col("cc"), col("cluster_size"))
@@ -190,12 +178,11 @@ object Graph {
     * without the cache each reference re-executes the whole upstream
     * plan (measured 7x on dd_triangles when the input is ppjoinPairs).
     * The derived degree and oriented-edge frames are cached too (both
-    * O(edges), both read 2-3 times). Caches route through `scope` for
-    * bounded lifetime, like every pair operator. */
-  def triangleStats(edges: DataFrame,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
-    val e = scope.track(edges.toDF("a", "b").distinct())
-    val deg = scope.track(e.select(col("a").as("v"))
+    * O(edges), both read 2-3 times). Caches route through the ambient
+    * [[CacheScope]], like every pair operator. */
+  def triangleStats(edges: DataFrame): DataFrame = {
+    val e = CacheScope.track(edges.toDF("a", "b").distinct())
+    val deg = CacheScope.track(e.select(col("a").as("v"))
       .union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d")))
     // attach endpoint degrees, orient low→high in the (degree, id) total
@@ -206,7 +193,7 @@ object Graph {
       .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
     val aKey = struct(col("da").as("d"), col("a").as("v"))
     val bKey = struct(col("db").as("d"), col("b").as("v"))
-    val oriented = scope.track(keyed.select(
+    val oriented = CacheScope.track(keyed.select(
       when(aKey < bKey, struct(col("a").as("x"), col("b").as("y"), bKey.as("yk")))
         .otherwise(struct(col("b").as("x"), col("a").as("y"), aKey.as("yk")))
         .as("e"))
@@ -252,17 +239,16 @@ object Graph {
     * non-edges, one (a,b)-keyed aggregate with map-side partials, then
     * top-k via TakeOrderedAndProject — never a global sort, never
     * all-pairs over the corpus. */
-  def linkPrediction(edges: DataFrame, topK: Int,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def linkPrediction(edges: DataFrame, topK: Int): DataFrame = {
     // orientation-normalize BEFORE distinct so (x,y)/(y,x) inputs collapse
     // to one undirected edge — same contract harmonicCentrality enforces by
     // symmetrization; callers need not pre-normalize
-    val e = scope.track(edges.toDF("u", "v")
+    val e = CacheScope.track(edges.toDF("u", "v")
       .select(least(col("u"), col("v")).as("a"),
         greatest(col("u"), col("v")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
-    val nbr = scope.track(
+    val nbr = CacheScope.track(
       e.select(col("a").as("x"), col("b").as("y"))
         .union(e.select(col("b").as("x"), col("a").as("y"))))
     val deg = nbr.groupBy(col("x")).agg(count(lit(1)).as("d"))
@@ -305,9 +291,8 @@ object Graph {
     * `maxDepth` caps rounds; the oracle mirrors the cap (the
     * [[bfsHops]] truncation convention), so a deeper-than-cap pair is
     * identically absent on both engines. */
-  def harmonicCentrality(edges: DataFrame, maxDepth: Int = 6,
-      scope: CacheScope = CacheScope.ambient): DataFrame =
-    harmonicImpl(edges, maxDepth, None, scope)
+  def harmonicCentrality(edges: DataFrame, maxDepth: Int = 6): DataFrame =
+    harmonicImpl(edges, maxDepth, None)
       .agg(sum(expr("1000000 DIV d")).as("harmonic_micros"),
         count(lit(1)).as("n_reached"))
       .orderBy(col("node"))
@@ -329,10 +314,9 @@ object Graph {
     * oracle replays the identical sampled walk, so the check is
     * bit-exact, not a tolerance. */
   def harmonicCentralitySampled(edges: DataFrame, maxDepth: Int = 6,
-      sampleMod: Int = 4,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+      sampleMod: Int = 4): DataFrame = {
     require(sampleMod >= 1, "sampleMod must be >= 1")
-    harmonicImpl(edges, maxDepth, Some(sampleMod), scope)
+    harmonicImpl(edges, maxDepth, Some(sampleMod))
       .agg((sum(expr("1000000 DIV d")) * sampleMod)
           .as("harmonic_est_micros"),
         count(lit(1)).as("n_src_reached"))
@@ -344,10 +328,9 @@ object Graph {
     * returning the (src, node, d>0) distance set grouped by node (the
     * caller picks the aggregate). */
   private def harmonicImpl(edges: DataFrame, maxDepth: Int,
-      sampleMod: Option[Int],
-      scope: CacheScope): org.apache.spark.sql.RelationalGroupedDataset = {
+      sampleMod: Option[Int]): org.apache.spark.sql.RelationalGroupedDataset = {
     val e = edges.toDF("a", "b").distinct()
-    val nbr = scope.track(
+    val nbr = CacheScope.track(
       e.select(col("a").as("x"), col("b").as("y"))
         .union(e.select(col("b").as("x"), col("a").as("y"))))
     val sources = sampleMod.foldLeft(nbr.select(col("x").as("v")).distinct()) {
@@ -394,7 +377,7 @@ object Graph {
     }
     val f1 = staleReached
     val f2 = staleFrontier
-    scope.onRelease(() => {
+    CacheScope.onRelease(() => {
       releaseCheckpoint(f1)
       if (f2 ne null) releaseCheckpoint(f2)
     })
@@ -424,8 +407,7 @@ object Graph {
     * observable-warning contract as CC. Peel is monotone (the surviving
     * edge set only shrinks), so extra rounds past convergence are no-ops
     * — the property that lets the DuckDB oracle unroll a fixed depth. */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 40,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 40): DataFrame = {
     val cols = edges.columns
     require(cols.length >= 2, "edge list needs (src, dst) columns")
     require(k >= 1, "k-core needs k >= 1")
@@ -474,7 +456,7 @@ object Graph {
       }
     }
     val finalCkpt = liveCkpt
-    scope.onRelease(() => releaseCheckpoint(finalCkpt))
+    CacheScope.onRelease(() => releaseCheckpoint(finalCkpt))
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"kCore hit maxIter=$maxIter without converging; " +
@@ -537,15 +519,14 @@ object Graph {
     * counts), one edge→label equi-join pair for intra counts, one
     * bounded window over the community-count-sized frame. `m` is ONE
     * driver count action (a scalar, not data). */
-  def modularity(edges: DataFrame, labels: DataFrame,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     val cols = edges.columns
     // cached (round 16): the census reads the edge set four times — the
     // m count action, the symmetric degree agg, and the intra-community
     // join pair — and without the cache each read re-executes the whole
     // upstream pair generation (the measured triangleStats lesson; for
     // dd_modularity that upstream is ppjoinPairs, ~0.5 s per re-run).
-    val e = scope.track(
+    val e = CacheScope.track(
       edges.select(col(cols(0)).as("a"), col(cols(1)).as("b")).distinct())
     val m = e.count()
     val denom = (4L * m * m).toDouble
@@ -603,12 +584,11 @@ object Graph {
     * algebra). Per-round localCheckpoint with eager release of the
     * previous round's blocks (the [[connectedComponents]] lifecycle);
     * driver state is one boolean. */
-  def bfsHops(edges: DataFrame, nSeeds: Int = 3, maxDepth: Int = 8,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def bfsHops(edges: DataFrame, nSeeds: Int = 3, maxDepth: Int = 8): DataFrame = {
     val cols = edges.columns
     require(cols.length >= 2, "edge list needs (src, dst) columns")
     val e = edges.select(col(cols(0)).as("a"), col(cols(1)).as("b")).distinct()
-    val sym = scope.track(
+    val sym = CacheScope.track(
       e.union(e.select(col("b").as("a"), col("a").as("b"))))
     val seeds = sym.select(col("a")).distinct().orderBy(col("a"))
       .limit(nSeeds)
@@ -658,7 +638,7 @@ object Graph {
     }
     val f1 = staleDist
     val f2 = staleFrontier
-    scope.onRelease(() => {
+    CacheScope.onRelease(() => {
       releaseCheckpoint(f1)
       if (f2 ne null) releaseCheckpoint(f2)
     })
@@ -694,17 +674,16 @@ object Graph {
     * Plan at 100 TB: per round one keyed equi-join (out-edges ⋈ scores
     * on the source id) and one id-keyed hash agg with map-side partial
     * sums — the textbook distributed PageRank shape; nothing all-pairs,
-    * no driver-side state. The edge list is cached via `scope` (it is
+    * no driver-side state. The edge list is cached via [[CacheScope]] (it is
     * read every round); score lineage grows linearly in `iters`, which
     * at 5 rounds needs no checkpoint (a 50-round run would
     * `localCheckpoint` every ~10 like [[connectedComponents]]). */
-  def pageRank(edges: DataFrame, iters: Int = 5,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
     val cols = edges.columns
     val e = edges.select(col(cols(0)).as("a"), col(cols(1)).as("b")).distinct()
-    val sym = scope.track(
+    val sym = CacheScope.track(
       e.union(e.select(col("b").as("a"), col("a").as("b"))))
-    val out = scope.track(sym.groupBy(col("a"))
+    val out = CacheScope.track(sym.groupBy(col("a"))
       .agg(count(lit(1)).as("outdeg"))
       .select(col("a").as("id"), col("outdeg")))
     // round 16: carry the DESTINATION's degree on each edge row (one
@@ -715,7 +694,7 @@ object Graph {
     // of some edge, so the aggregate's groups are exactly `out`'s rows,
     // in_sum is never NULL, and first(bdeg) is the constant outdeg of
     // `b` — the arithmetic below is byte-identical to the joined form.
-    val symDeg = scope.track(sym
+    val symDeg = CacheScope.track(sym
       .join(out.select(col("id").as("b"), col("outdeg").as("bdeg")), Seq("b")))
     var r = out.withColumn("score", lit(1000000000L))
     (1 to iters).foreach { _ =>
@@ -746,8 +725,7 @@ object Graph {
     * for all but each user's final state — acceptable leak, documented).
     * Plan per iteration: one src-keyed equi-join + one dst-keyed agg;
     * the node table is |nodes|-bounded and broadcasts. */
-  def weightedPageRank(edges: DataFrame, iters: Int = 5,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def weightedPageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
     val cols = edges.columns
     // round 17: the edge table itself is small (transition graphs are
     // |node types|²-bounded) but its LINEAGE is a data-sized extraction
@@ -755,14 +733,14 @@ object Graph {
     // the whole events table), and uncached it re-ran once per
     // iteration join plus once each for out/nodes — the round-start
     // static plan held 46 Window nodes for 5 iterations. Cache the
-    // edge and node tables via scope — [[pageRank]]'s round-16 lesson
+    // edge and node tables via CacheScope — [[pageRank]]'s round-16 lesson
     // applied to the weighted variant.
-    val e = scope.track(edges.select(col(cols(0)).as("a"),
+    val e = CacheScope.track(edges.select(col(cols(0)).as("a"),
       col(cols(1)).as("b"), col(cols(2)).as("w")))
     val out = e.groupBy(col("a")).agg(sum(col("w")).as("wout"))
       .select(col("a").as("id"), col("wout"))
     // nodes = every endpoint (a sink-only node still accumulates score)
-    val nodes = scope.track(
+    val nodes = CacheScope.track(
       e.select(col("a").as("id")).union(e.select(col("b").as("id")))
         .distinct().join(out, Seq("id"), "left")
         .select(col("id"), coalesce(col("wout"), lit(0L)).as("wout")))
@@ -771,7 +749,7 @@ object Graph {
     // round. Identical arithmetic — wout is constant per source, and
     // every `a` is in nodes with its true out-mass, so `score·w DIV
     // wout` sees exactly the value the old r-carried column held.
-    val eW = scope.track(e.join(
+    val eW = CacheScope.track(e.join(
       nodes.select(col("id").as("a"), col("wout")), Seq("a")))
     var r = nodes.withColumn("score", lit(1000000000L))
     (1 to iters).foreach { _ =>
@@ -809,11 +787,10 @@ object Graph {
     * vertex-keyed MIN agg, all with map-side partials; per-round
     * localCheckpoint keeps lineage flat (the [[connectedComponents]]
     * lifecycle). Nothing all-pairs, no driver state. */
-  def labelPropagation(edges: DataFrame, rounds: Int = 4,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val cols = edges.columns
     val e = edges.select(col(cols(0)).as("a"), col(cols(1)).as("b")).distinct()
-    val sym = scope.track(
+    val sym = CacheScope.track(
       e.union(e.select(col("b").as("a"), col("a").as("b"))))
     var labels: DataFrame = sym.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -833,7 +810,7 @@ object Graph {
         .select(col("a").as("id"), col("best.l").as("label"))
     }
     val finalCkpt = labels.localCheckpoint()
-    scope.onRelease(() => releaseCheckpoint(finalCkpt))
+    CacheScope.onRelease(() => releaseCheckpoint(finalCkpt))
     finalCkpt
   }
 
@@ -848,17 +825,16 @@ object Graph {
     * disagreement). Plan: one degree agg + two id-keyed joins + one
     * global moment agg — all map-side-partial shuffles on the edge
     * list the caller already materialized. */
-  def assortativity(pairs: DataFrame,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  def assortativity(pairs: DataFrame): DataFrame = {
     val cols = pairs.columns
     // cached (round 16): `sym` is scanned by the degree agg AND the
     // endpoint join, `deg` by both endpoint joins — without the caches
     // every scan re-executes the upstream pair generation (ppjoinPairs
     // for dd_assortativity), the triangleStats lesson again.
-    val sym = scope.track(
+    val sym = CacheScope.track(
       pairs.select(col(cols(0)).as("a"), col(cols(1)).as("b"))
         .union(pairs.select(col(cols(1)).as("a"), col(cols(0)).as("b"))))
-    val deg = scope.track(
+    val deg = CacheScope.track(
       sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg")))
     val dp = sym
       .join(deg.select(col("id").as("a"), col("deg").as("dx")), Seq("a"))

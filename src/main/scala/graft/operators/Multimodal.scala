@@ -831,7 +831,7 @@ object Multimodal {
     // plan shows two full MapPartitions chains under the join — the
     // corpus was decoded twice per run). The cache is 16 bytes/image;
     // the decode is the query's dominant cost.
-    val hashes = CacheScope.ambient.track(rawHashes)
+    val hashes = CacheScope.track(rawHashes)
     val bands = hashes.select(col("doc_id"), col("h"),
       explode(array((0 until 4).map(j =>
         struct(lit(j).as("band"),

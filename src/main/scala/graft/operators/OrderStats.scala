@@ -42,7 +42,7 @@ object OrderStats {
     // input. Uncached, the second scan re-runs the ENTIRE upstream plan
     // through the range exchange — for the ccnet queries that upstream
     // is the whole KN scoring pipeline.
-    val withPid = CacheScope.ambient.track(
+    val withPid = CacheScope.track(
       df.repartitionByRange(sortCols: _*)
         .withColumn("__pid", spark_partition_id()))
     val wCum = Window.orderBy(col("__pid"))
@@ -73,7 +73,7 @@ object OrderStats {
     // cached for the same reason as [[withGlobalRank]] (round 17): the
     // offsets scan must complete before the join scan starts, so
     // uncached the upstream runs twice, strictly sequentially
-    val withPid = CacheScope.ambient.track(
+    val withPid = CacheScope.track(
       df.repartitionByRange(sortCols: _*)
         .withColumn("__v", value.cast("long"))
         .withColumn("__pid", spark_partition_id()))

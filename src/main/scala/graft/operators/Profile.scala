@@ -231,7 +231,7 @@ object Profile {
     // cached (round 16): the ranked frame feeds the median lookup and
     // both rank-window sides — three scans; exchange reuse shares the
     // range shuffle but re-ran the per-partition sort+window each time
-    val ranked = CacheScope.ambient.track(
+    val ranked = CacheScope.track(
       OrderStats.withGlobalRank(cents, Seq(col("__v"))))
     val rk = expr("(n + 1) DIV 2") // r = k = median rank
     val med = ranked.filter(col("rn") === rk)

@@ -996,16 +996,9 @@ object Similarity {
     * Storage hygiene (ARCHITECTURE "Iterative-operator storage
     * hygiene"): each iteration's localCheckpoint blocks are released
     * the moment the next materializes — O(1) rounds held, not
-    * O(iters); the final round registers with the caller's
+    * O(iters); the final round registers with the ambient
     * [[CacheScope]]. */
-  def pcaTopComponent(corpus: DataFrame, iters: Int = 8, dim: Int = 64,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
-    def releaseCkpt(df: DataFrame): Unit =
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+  def pcaTopComponent(corpus: DataFrame, iters: Int = 8, dim: Int = 64): DataFrame = {
     val xs = corpus.select(col("vec_id"),
       posexplode(transform(col("embedding"),
         x => round(x.cast("double") * 1000000).cast("long"))))
@@ -1055,12 +1048,12 @@ object Similarity {
             transform(col("u"), x => x / col("nrm")).as("v"))
       }
       val next = cur.localCheckpoint()
-      releaseCkpt(vf) // previous rounds: dead once `next` materialized
+      CacheScope.releaseCheckpoint(vf) // previous rounds: dead once `next` materialized
       vf = next
       done += k
     }
     val lastCkpt = vf
-    scope.onRelease(() => releaseCkpt(lastCkpt))
+    CacheScope.onRelease(() => CacheScope.releaseCheckpoint(lastCkpt))
     val fin = vf.select(col("v"), matvec(col("v")).as("u"))
       .select(col("v"),
         aggregate(zip_with(col("v"), col("u"), (a, b) => a * b),

@@ -549,7 +549,7 @@ object TextOps {
     // cached (round 16): the exploded bigram stream feeds the bigram
     // count table, the prefix count table AND the scoring probe — three
     // scans, each otherwise re-reading and re-exploding the corpus
-    val bg = graft.operators.CacheScope.ambient.track(
+    val bg = CacheScope.track(
       t.filter(size(col("toks")) >= 2)
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), size(col("toks")) - 2),
@@ -682,7 +682,7 @@ object TextOps {
       concat(lit("  "),
         array_join(expr("regexp_extract_all(word, '.', 0)"), "  "),
         lit("  ")).as("seq"),
-      col("cnt")).cache()
+      col("cnt")).cache() // round-scoped: released below, not by CacheScope
     val merges = scala.collection.mutable.Buffer.empty[(Int, String, String, String, Long)]
     var prev: DataFrame = null
     for (r <- 1 to rounds) {
@@ -714,7 +714,7 @@ object TextOps {
         // still-cached parent across the round boundary.
         val next = seqs.select(
           replace(col("seq"), lit(s" $a  $b "), lit(s" $a$b ")).as("seq"),
-          col("cnt")).cache()
+          col("cnt")).cache() // released by the next round, not CacheScope
         prev = seqs
         seqs = next
       }
@@ -1050,8 +1050,7 @@ object TextOps {
   /** The dppm contrast table derived from a doc×bucket count frame that
     * carries an `is_target` flag — shared by the one-pass [[dsirScreen]]
     * and the frozen-model [[dsirDim]]. */
-  private def dsirDimOf(perDoc: DataFrame,
-      scope: CacheScope = CacheScope.ambient): DataFrame = {
+  private def dsirDimOf(perDoc: DataFrame): DataFrame = {
     // ONE bucket-keyed conditional aggregate replaces the raw/tgt
     // aggregate pair (round 17, guide §2 one-shuffle multi-aggregate):
     // ct = Σ c over target rows is the same BIGINT whether summed from a
@@ -1061,7 +1060,7 @@ object TextOps {
     // cache; nothing like the measured-slower perDoc cache) so the raw
     // corpus-sized perDoc plan executes ONCE for the whole dim table
     // instead of four times (raw×2 + tgt×2 via the old totals crossJoin).
-    val stats = scope.track(perDoc.groupBy(col("bucket")).agg(
+    val stats = CacheScope.track(perDoc.groupBy(col("bucket")).agg(
       sum(col("c")).as("cr"),
       coalesce(sum(when(col("is_target"), col("c"))), lit(0L)).as("ct")))
     val totals = stats.agg(sum(col("cr")).as("tot_r"),

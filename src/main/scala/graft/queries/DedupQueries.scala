@@ -10,15 +10,12 @@ import graft.operators.{Dedup, Graph, Similarity}
 
 /** Deduplication family over `documents` / `embeddings`.
   *
-  * Cache lifecycle: registry entries return LAZY plans that the driver
-  * consumes later, so they cannot wrap `CacheScope.using` around their
-  * own result (the scope would unpersist before the driver's action
-  * runs). The contract is therefore: registry results carry
-  * `CacheScope.ambient` caches, and every consumer that owns the action
-  * bounds them — `Verify` and `Bench` both `clearCache()` per query
-  * (asserted style in CacheScopeSpec); library callers who own their
-  * actions use `CacheScope.using` directly for exact loan-pattern
-  * bounding.
+  * Cache lifecycle: registry entries return LAZY plans that the caller
+  * consumes later, so their operators cache into the ambient
+  * `CacheScope`, and every caller that owns the action (`Verify`,
+  * `Bench`, the specs) wraps build-plus-action in `CacheScope.scoped`,
+  * which releases every cache and checkpoint the entry created
+  * (asserted over the whole registry in PartitionInvarianceSpec).
   *
   * dd_ngram_jaccard (count-sharing join), dd_ppjoin (prefix+position
   * filtered) and dd_minhash share one oracle: the brute-force O(n²)
@@ -301,7 +298,7 @@ object DedupQueries extends QueryFamily {
       // cached (round 16): the half1/half2 split scans the pair set
       // twice, and each uncached scan re-runs the whole ppjoin pipeline
       // (~0.5 s) — the triangleStats multi-consumer lesson
-      val pairs = graft.operators.CacheScope.ambient.track(
+      val pairs = graft.operators.CacheScope.track(
         Dedup.ppjoinPairs(Tables.documents(s, d), Threshold)
           .select(col("doc_a"), col("doc_b")))
       val half1 = pairs.filter((col("doc_a") + col("doc_b")) % 2 === 0)

@@ -221,10 +221,8 @@ object MultimodalQueries extends QueryFamily {
       // cached (round 17): the encoded-PNG frame feeds BOTH the tile
       // index and the crop probe — uncached, each branch re-synthesizes
       // and re-encodes every image (the dominant per-row cost)
-      val full = Multimodal.encodeImages(
-        Tables.documents(s, d).filter(col("doc_id") % 2 === 0)).cache()
-      graft.operators.CacheScope.ambient.onRelease(
-        () => { full.unpersist(blocking = false); () })
+      val full = graft.operators.CacheScope.track(Multimodal.encodeImages(
+        Tables.documents(s, d).filter(col("doc_id") % 2 === 0)))
       val index = Multimodal.tileSignatures(full).toDF()
         .select(col("doc_id").as("full_doc"), col("tile"),
           col("tile_w"), col("tile_h"), col("sig"))

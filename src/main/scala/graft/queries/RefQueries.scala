@@ -569,7 +569,7 @@ object RefQueries extends QueryFamily {
       // cached (round 16): `st` is scanned four times (session count,
       // per-type counts, both self-join sides) and each uncached scan
       // re-ran the session window over the full event table
-      val st = graft.operators.CacheScope.ambient.track(
+      val st = graft.operators.CacheScope.track(
         withSessionIds(Tables.events(s, d))
           .select(col("user_id"), col("session_id"), col("event_type"))
           .distinct())

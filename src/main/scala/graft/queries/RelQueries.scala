@@ -1395,12 +1395,12 @@ object RelQueries extends QueryFamily {
       // scanned three times (freq + both sides of the self-join) and
       // `pairs` twice (the directed union) — uncached, each scan re-ran
       // the upstream shuffle (the triangleStats multi-consumer lesson)
-      val baskets = graft.operators.CacheScope.ambient.track(
+      val baskets = graft.operators.CacheScope.track(
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey")).distinct())
       val freq = baskets.groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("freq"))
-      val pairs = graft.operators.CacheScope.ambient.track(baskets.as("a")
+      val pairs = graft.operators.CacheScope.track(baskets.as("a")
         .join(baskets.as("b"), Seq("l_orderkey"))
         .filter(col("a.l_partkey") < col("b.l_partkey"))
         .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))

@@ -469,7 +469,7 @@ object TextQueries extends QueryFamily {
       // cached (round 16): `tf` feeds the norms agg, the query-side
       // filter and the posting-list join — three scans, each otherwise
       // re-running the full-token explode + count
-      val tf = graft.operators.CacheScope.ambient.track(docs(s, d)
+      val tf = graft.operators.CacheScope.track(docs(s, d)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
       val norms = tf.groupBy(col("doc_id"))

@@ -50,25 +50,24 @@ object Formats {
     * with no audit trail; quarantining keeps the job running AND keeps
     * the bad bytes replayable after the upstream fix.
     *
-    * The parsed batch is `cache()`d before the split, for two reasons:
+    * The parsed batch is cached before the split, for two reasons:
     * one parse feeds both sides, and — load-bearing — Spark REFUSES any
     * raw-file query whose pruned schema is only the corrupt column
     * (column pruning turns `quarantine.count()` into exactly that; the
     * documented workaround is to cache the parsed rows, which
     * materializes full rows and lifts the restriction). The cache block
-    * is tiny relative to the source (one ingest batch) and falls under
-    * the registry's periodic `clearCache` hygiene; long-lived callers
-    * should `unpersist()` after writing the quarantine audit.
+    * is tiny relative to the source (one ingest batch) and is tracked in
+    * the ambient [[graft.operators.CacheScope]], so a caller's `scoped`
+    * block releases it after the quarantine audit is written.
     */
   def readJsonQuarantine(spark: SparkSession, path: String,
                          schema: org.apache.spark.sql.types.StructType,
                          corruptCol: String = "_corrupt_record"): (DataFrame, DataFrame) = {
-    val parsed = spark.read
+    val parsed = graft.operators.CacheScope.track(spark.read
       .schema(schema.add(corruptCol, "string"))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-      .cache()
+      .json(path))
     val clean = parsed.filter(col(corruptCol).isNull).drop(corruptCol)
     val quarantine = parsed.filter(col(corruptCol).isNotNull)
     (clean, quarantine)

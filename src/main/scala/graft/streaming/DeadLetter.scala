@@ -42,7 +42,7 @@ object DeadLetter {
     * to `sink`. The batch is persisted across the two passes. */
   def route(batch: DataFrame, batchId: Long, deadLetterDir: String)
       (sink: DataFrame => Unit): Unit = {
-    batch.persist()
+    batch.persist() // batch-scoped: the finally below frees it, not CacheScope
     try {
       batch.filter(col(CorruptCol).isNotNull)
         .select(col(CorruptCol).as("raw_line"))

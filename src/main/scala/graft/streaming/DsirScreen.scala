@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
-import graft.operators.TextOps
+import graft.operators.{CacheScope, TextOps}
 
 /** Streaming DSIR importance screen: the (bucket, dppm) contrast table of
   * a STATIC target-vs-raw corpus pair (Xie et al. 2023 — built once, in
@@ -19,10 +19,11 @@ import graft.operators.TextOps
   * across batches, and the raw/target history is never re-shuffled. */
 object DsirScreen {
 
-  /** One frozen model: the dppm dimension, cached eagerly so every
-    * micro-batch probes a warm `numBuckets`-row table. */
+  /** One frozen model: the dppm dimension, cached eagerly (in the
+    * ambient [[CacheScope]]) so every micro-batch probes a warm
+    * `numBuckets`-row table. */
   final case class DsirModel(dim: DataFrame, numBuckets: Int) {
-    def materialize(): DsirModel = { dim.cache().count(); this }
+    def materialize(): DsirModel = { CacheScope.track(dim).count(); this }
   }
 
   def buildModel(corpus: DataFrame, isTarget: Column,

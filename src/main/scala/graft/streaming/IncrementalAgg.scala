@@ -210,6 +210,7 @@ class PartitionedUpsert(
     // and the cache hold one block instead of one per shuffle partition
     // (measured: a tiny delta behind 32 shuffle partitions cost a
     // 32-task job per downstream action).
+    // batch-scoped: the finally below frees it, not CacheScope
     val delta = aggregate(batch).coalesce(1).persist()
     try {
     // bounded driver action: distinct partitions in ONE micro-batch (the

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
-import graft.operators.TextOps
+import graft.operators.{CacheScope, TextOps}
 
 /** Streaming Kneser-Ney quality screen: the KN count tables of a STATIC
   * training corpus (built once — in production, persisted term-keyed),
@@ -21,12 +21,12 @@ import graft.operators.TextOps
 object QualityScreen {
 
   /** One KN model: the four [[TextOps.knTables]] frames, cached eagerly
-    * so every micro-batch probes warm tables instead of re-aggregating
-    * the training corpus (the spec calls count() to materialize). */
+    * (in the ambient [[CacheScope]]) so every micro-batch probes warm
+    * tables instead of re-aggregating the training corpus. */
   final case class KnModel(c2t: DataFrame, w1stats: DataFrame,
       nc: DataFrame, nt: DataFrame) {
     def materialize(): KnModel = {
-      Seq(c2t, w1stats, nc, nt).foreach(df => df.cache().count())
+      Seq(c2t, w1stats, nc, nt).foreach(df => CacheScope.track(df).count())
       this
     }
   }

@@ -80,7 +80,7 @@ object ReportSink {
   /** One report tick: materialize the cumulative snapshot, then write
     * every derived table from it concurrently. */
   def writeReport(valueCounts: DataFrame, outDir: String, batchId: Long): Unit = {
-    valueCounts.persist()
+    valueCounts.persist() // tick-scoped: the finally below frees it, not CacheScope
     try {
       // build the whole cache here, one task per snapshot partition; a
       // coalesce(1) above an unbuilt cache would run them all in series

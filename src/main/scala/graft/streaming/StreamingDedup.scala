@@ -26,9 +26,9 @@ object StreamingDedup {
     // cached (round 17): the returned shingle sets feed BOTH the
     // signature chain (via bands) and the caller's exact-verify join —
     // separate query executions, so the uncached shingle transform ran
-    // twice over the history. buildIndex runs once per re-index cadence
-    // (ambient scope; released by the per-query clearCache convention).
-    val sh = graft.operators.CacheScope.ambient.track(
+    // twice over the history. buildIndex runs once per re-index cadence;
+    // the cache lives as long as the caller's CacheScope.scoped block.
+    val sh = graft.operators.CacheScope.track(
       Dedup.shingleSets(historical))
     val bands = Dedup.bandTable(Dedup.minhashSignature(sh))
     (bands, sh)
@@ -80,11 +80,11 @@ object StreamingDedup {
       indexShingles: DataFrame, threshold: Double): DataFrame = {
     // cached (round 17): the batch's shingle sets feed its band table
     // AND the verify join — without the cache the shingle transform runs
-    // twice per batch. Ambient-scoped: in the foreachBatch deployment the
-    // caches release with the consumer's per-query clearCache; per-batch
-    // frames are batch-sized, so accumulation within one stream run is
-    // bounded by the stream's own input.
-    val sh = graft.operators.CacheScope.ambient.track(
+    // twice per batch. Ambient-scoped: a stream started inside
+    // CacheScope.scoped inherits that scope, so its per-batch caches are
+    // released with the block; per-batch frames are batch-sized, so
+    // accumulation within one stream run is bounded by its own input.
+    val sh = graft.operators.CacheScope.track(
       Dedup.shingleSets(newDocs))
     val newBands = Dedup.bandTable(Dedup.minhashSignature(sh))
     val cand = newBands.as("n")

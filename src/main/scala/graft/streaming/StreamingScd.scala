@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{Layout, Scd}
+import graft.operators.{CacheScope, Layout, Scd}
 
 /** STREAMING maintenance of an SCD Type-2 dimension — the ingest-path
   * version of [[Scd.scd2Merge]] and the dimension-table sibling of
@@ -62,16 +62,18 @@ object StreamingScd {
     val merged = Scd
       .scd2Merge(current, collapsed, key, tracked, batchDate)
       .localCheckpoint() // materialize BEFORE overwriting what it read
-    // write 1: the new current slice replaces state=current only
-    Layout.overwritePartitions(
-      merged.filter(col("is_current")).drop("is_current")
-        .withColumn("state", lit("current")),
-      path, "state", dynamic = true)
-    // write 2: newly closed versions append to the untouched history
-    // (current input had no closed rows, so this is exactly the delta)
-    merged.filter(!col("is_current")).drop("is_current")
-      .withColumn("state", lit("closed"))
-      .write.partitionBy("state").mode("append").parquet(path)
+    try {
+      // write 1: the new current slice replaces state=current only
+      Layout.overwritePartitions(
+        merged.filter(col("is_current")).drop("is_current")
+          .withColumn("state", lit("current")),
+        path, "state", dynamic = true)
+      // write 2: newly closed versions append to the untouched history
+      // (current input had no closed rows, so this is exactly the delta)
+      merged.filter(!col("is_current")).drop("is_current")
+        .withColumn("state", lit("closed"))
+        .write.partitionBy("state").mode("append").parquet(path)
+    } finally CacheScope.releaseCheckpoint(merged) // batch-scoped blocks
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()
   }

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{Engine, SparkEntry}
+import graft.operators.CacheScope
 
 /** Formatted physical plans of registered queries, in PLANS.md's format
   * (`## name` and the fenced plan): the plan-shape evidence (pushdown,
@@ -85,8 +86,11 @@ object Explain {
     sb.append("for dimensions, partial+final `HashAggregate`, codegen stage ids.\n")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
+      // each plan inside its own scope: an earlier query's cache must not
+      // turn this one's scan into an InMemoryRelation
       val plan =
-        try fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+        try CacheScope.scoped(
+          fn(spark, sfDir).queryExecution.explainString(FormattedMode))
         catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}\n" }
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }

@@ -29,7 +29,6 @@ object JobCount {
       graft.operators.CacheScope.scoped {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      spark.catalog.clearCache()
       Thread.sleep(500) // let listener drain
       jobs.set(0)
       val t0 = System.nanoTime()
@@ -39,7 +38,6 @@ object JobCount {
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500)
       println(f"[jobcount] $name%-28s jobs=${jobs.get()}%4d  $sec%7.3f s")
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 import graft.{Engine, SparkEntry}
+import graft.operators.CacheScope
 
 /** Operator-multiset plan fingerprints for EVERY registered query — the
   * whole-registry extension of PlanSpec's 16 hand-pinned shapes: a golden
@@ -122,8 +123,9 @@ object PlanFingerprint {
     * threshold, so fact-sized join sides genuinely exceed it and the
     * golden records which joins flip to sort-merge when data grows —
     * exactly the drift the sf0.001 golden (where every side broadcasts)
-    * cannot see. Caches are cleared per query so one query's `cache()`
-    * can't turn another's scan into `InMemoryTableScan`. */
+    * cannot see. Each query is fingerprinted inside its own
+    * `CacheScope.scoped`, so one query's cache can't turn another's scan
+    * into `InMemoryTableScan`. */
   def fingerprintAllFinal(spark: SparkSession, sfDir: String,
       names: Set[String] = Set.empty): Seq[(String, String)] = {
     val pinned = Map(
@@ -137,8 +139,7 @@ object PlanFingerprint {
         .filterNot { case (name, _) => excluded(name) || excludedSf01(name) }
         .filter { case (name, _) => names.isEmpty || names(name) }
         .map { case (name, fn) =>
-          try name -> fingerprintFinal(fn(spark, sfDir))
-          finally spark.catalog.clearCache()
+          name -> CacheScope.scoped(fingerprintFinal(fn(spark, sfDir)))
         }
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -161,12 +162,11 @@ object PlanFingerprint {
         .filterNot { case (name, _) => excluded(name) }
         .map { case (name, fn) =>
           // per-query cache isolation, like fingerprintAllFinal (round
-          // 16): registry lambdas now ambient-cache multi-consumer
-          // frames, and a leaked cache entry turns a LATER query's
-          // identical subtree into InMemoryTableScan — the golden would
-          // then depend on alphabetical execution order
-          try name -> fingerprint(fn(spark, sfDir))
-          finally spark.catalog.clearCache()
+          // 16): registry lambdas ambient-cache multi-consumer frames,
+          // and a leaked cache entry turns a LATER query's identical
+          // subtree into InMemoryTableScan — the golden would then
+          // depend on alphabetical execution order
+          name -> CacheScope.scoped(fingerprint(fn(spark, sfDir)))
         }
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -289,9 +289,10 @@ object PlanFingerprint {
               "spark.sql.autoBroadcastJoinThreshold" -> "64m",
               "spark.sql.shuffle.partitions" -> "8")
           pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-          val fp = if (sf01Mode) fingerprintFinal(fn(spark, sfDir))
+          val fp = CacheScope.scoped {
+            if (sf01Mode) fingerprintFinal(fn(spark, sfDir))
             else fingerprint(fn(spark, sfDir))
-          spark.catalog.clearCache()
+          }
           println(s"pass=$pass\t$name\t$fp")
         }
       }

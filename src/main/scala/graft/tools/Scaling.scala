@@ -49,7 +49,7 @@ object Scaling {
         new java.util.concurrent.Callable[(Long, String)] {
           def call(): (Long, String) = {
             graft.operators.Graph.drainIterationLog(): Unit
-            val n = fn(spark, sfDir).count()
+            val n = graft.operators.CacheScope.scoped(fn(spark, sfDir).count())
             (n, graft.operators.Graph.drainIterationLog())
           }
         })
@@ -74,7 +74,6 @@ object Scaling {
         }
       println(line)
       System.out.flush()
-      spark.catalog.clearCache()
     }
     pool.shutdownNow()
     spark.stop()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Engine, Tables}
-import graft.operators.Similarity
+import graft.operators.{CacheScope, Similarity}
 
 /** Param-scaled ANN measurement for SCALING.md.
   *
@@ -71,7 +71,7 @@ object ScalingTuned {
         Similarity.semDedup(emb, 0.4, nCells = nCells, lloydIters = 1)))
 
     cases.foreach { case (name, mk) =>
-      def run(): Long = { val c = mk().count(); spark.catalog.clearCache(); c }
+      def run(): Long = CacheScope.scoped(mk().count())
       val rows = run() // warmup
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()

@@ -21,7 +21,8 @@ class BenchCoreSpec extends AnyFunSuite {
       prior: Map[String, Double] = Map.empty,
       failWhen: (String, Int) => Boolean = (_, _) => false,
       noWarmup: Set[String] = Set.empty,
-      coldPrior: Map[String, Double] = Map.empty) {
+      coldPrior: Map[String, Double] = Map.empty,
+      visit: (() => Unit) => Unit = body => body()) {
     var nowNs = 0L
     val calls = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
     val h = new BenchCore.Harness(
@@ -32,7 +33,8 @@ class BenchCoreSpec extends AnyFunSuite {
         val cs = costs(name)
         nowNs += (cs(math.min(i, cs.size - 1)) * 1e9).toLong
       },
-      () => nowNs, budgetS, prior, noWarmup = noWarmup, coldPrior = coldPrior)
+      () => nowNs, budgetS, prior, noWarmup = noWarmup, coldPrior = coldPrior,
+      visit = visit)
   }
 
   test("healthy run: best-of map, ascending artifact order, all three lines parse") {
@@ -136,6 +138,32 @@ class BenchCoreSpec extends AnyFunSuite {
     f.h.runPass(0); f.h.runPass(1); f.h.retryPass()
     assert(f.h.nFailed === 1 && f.h.total === 0.0)
     assert(parse(f.h.artifactLine("/sf", "", "")).get("queries").get("qa").asDouble === -1.0)
+  }
+
+  test("one visit wrapper call spans each warmup and its timed runs, in runPass and retryPass") {
+    // Bench scopes operator caches per visit: a timed run must read the
+    // caches its warmup filled, so both run inside ONE wrapper call.
+    // Recorded: the runs each wrapper call made, per query name.
+    var fake: Fake = null
+    val visits = scala.collection.mutable.Buffer.empty[Map[String, Int]]
+    val recordVisit: (() => Unit) => Unit = body => {
+      val before = fake.calls.toMap
+      body()
+      visits += fake.calls.toMap.map { case (n, c) => n -> (c - before.getOrElse(n, 0)) }
+        .filter(_._2 > 0)
+    }
+    // qa: 1 s until its 4th run, 10 s after → a stall suspect for retry
+    fake = new Fake(Map("qa" -> Seq(1.0, 1.0, 1.0, 10.0), "qb" -> Seq(1.0)),
+      budgetS = 1e9, visit = recordVisit)
+    fake.h.runPass(0); fake.h.runPass(1)
+    assert(fake.h.suspect("qa"))
+    fake.h.retryPass()
+    assert(visits.toList === List(
+      Map("qa" -> 2), Map("qb" -> 2),  // pass 0: warmup + timed per visit
+      Map("qb" -> 2), Map("qa" -> 2),  // pass 1, reverse order
+      Map("qa" -> 3)))                 // retry: warmup refill + 2 extras
+    assert(fake.calls.values.sum === visits.map(_.values.sum).sum,
+      "a run executed outside any visit")
   }
 
   test("stall suspect re-measured in the final retry phase, bounded at 2 extra runs") {

@@ -18,6 +18,21 @@ object TestSpark {
 abstract class GraftSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Ids of every persistent RDD (caches and checkpoint blocks) live in
+    * the shared session's context right now. */
+  protected def persistentRddIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Persistent RDDs beyond `baseline` that are still live after a brief
+    * poll (scopes release with `unpersist(blocking = false)`). The shared
+    * session carries earlier suites' storage, so leak checks are deltas. */
+  protected def leakedSince(baseline: Set[Int]): Set[Int] = {
+    val deadline = System.nanoTime() + 10e9.toLong
+    while ((persistentRddIds() -- baseline).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    persistentRddIds() -- baseline
+  }
+
   /** Runs `check` under whole-stage codegen, then again with codegen off
     * everywhere: a `StaticInvoke` kernel's interpreted path finds the
     * kernel method by reflection instead of compiling a direct call. */

@@ -72,12 +72,12 @@ class PlanSpec extends GraftSparkSpec {
   }
 
   test("corpus dedup pass never plans an unkeyed (all-pairs) join") {
-    val df = graft.operators.Dedup.dedupCorpus(Tables.documents(spark, sf), 0.8)
-    val plan = physical(df)
+    // the scope releases the pass's operator caches and checkpoints
+    val plan = graft.operators.CacheScope.scoped(physical(
+      graft.operators.Dedup.dedupCorpus(Tables.documents(spark, sf), 0.8)))
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"all-pairs join in dedup pass:\n$plan")
-    spark.catalog.clearCache() // release the pass's operator caches
   }
 
   test("semi join plans as a real left-semi, anti as left-anti") {

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSparkSpec
 
-/** Library-usage cache-lifecycle contract: a dedup operator invoked through
-  * CacheScope.using must leave ZERO cached blocks behind after the loan
-  * block returns, and the result computed inside the scope must equal the
-  * unmanaged (session-lifetime cache) result. */
+/** Library-usage cache-lifecycle contract: a dedup operator invoked inside
+  * CacheScope.scoped must leave ZERO cached blocks behind after the block
+  * returns, and the result computed inside the scope must equal the
+  * unscoped (session-lifetime cache) result. */
 class CacheScopeSpec extends GraftSparkSpec {
 
   private lazy val docs = {
@@ -28,44 +28,37 @@ class CacheScopeSpec extends GraftSparkSpec {
   // (and must not) drop. The contract under test is therefore a DELTA: no
   // persistent RDD *created inside the scope* may outlive it — not that the
   // whole session is cache-free.
-  private def persistentIds(): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
   private def leakedAfter(baseline: Set[Int]): Set[Int] =
-    persistentIds() -- baseline
+    persistentRddIds() -- baseline
 
-  test("CacheScope.using releases every operator cache after the loan block") {
+  test("CacheScope.scoped releases every operator cache after the block") {
     spark.catalog.clearCache()
-    val baseline = persistentIds()
-    val operators = Seq[(String, CacheScope => org.apache.spark.sql.DataFrame)](
-      "jaccard" -> (s => Dedup.jaccardPairsExact(docs, 0.5, s)),
-      "ppjoin" -> (s => Dedup.ppjoinPairs(docs, 0.5, s)),
-      "containment" -> (s => Dedup.containmentPairs(docs, 0.9, s)),
-      "minhash" -> (s => Dedup.minhashPairs(docs, 0.5, s)),
-      "simhash" -> (s => Dedup.simhashPairs(docs, 3, portable = true, s)),
-      "dedupCorpus" -> (s => Dedup.dedupCorpus(docs, 0.8, s)))
+    val baseline = persistentRddIds()
+    val operators = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "jaccard" -> (() => Dedup.jaccardPairsExact(docs, 0.5)),
+      "ppjoin" -> (() => Dedup.ppjoinPairs(docs, 0.5)),
+      "containment" -> (() => Dedup.containmentPairs(docs, 0.9)),
+      "minhash" -> (() => Dedup.minhashPairs(docs, 0.5)),
+      "simhash" -> (() => Dedup.simhashPairs(docs, 3, portable = true)),
+      "dedupCorpus" -> (() => Dedup.dedupCorpus(docs, 0.8)))
     operators.foreach { case (name, build) =>
-      val n = CacheScope.using(build) { pairs =>
-        val c = pairs.count() // materializes the operator's lazy cache()s
+      val n = CacheScope.scoped {
+        val c = build().count() // materializes the operator's lazy cache()s
         assert(leakedAfter(baseline).nonEmpty,
           s"$name: expected live caches inside the scope")
         c
       }
       assert(n >= 0)
-      // unpersist(blocking = false) is async; poll briefly for drain
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (leakedAfter(baseline).nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(leakedAfter(baseline) === Set.empty[Int],
-        s"$name: cached blocks outlived the CacheScope.using block")
+      assert(leakedSince(baseline) === Set.empty[Int],
+        s"$name: cached blocks outlived the CacheScope.scoped block")
     }
   }
 
   test("scoped result is identical to the unmanaged default") {
     val unmanaged = Dedup.ppjoinPairs(docs, 0.5)
       .orderBy("doc_a", "doc_b").collect().toSeq
-    val scoped = CacheScope.using(s => Dedup.ppjoinPairs(docs, 0.5, s)) {
-      _.orderBy("doc_a", "doc_b").collect().toSeq
+    val scoped = CacheScope.scoped {
+      Dedup.ppjoinPairs(docs, 0.5).orderBy("doc_a", "doc_b").collect().toSeq
     }
     assert(scoped === unmanaged)
     spark.catalog.clearCache()
@@ -73,16 +66,44 @@ class CacheScopeSpec extends GraftSparkSpec {
 
   test("release is exception-safe: caches freed when the loan block throws") {
     spark.catalog.clearCache()
-    val baseline = persistentIds()
+    val baseline = persistentRddIds()
     intercept[RuntimeException] {
-      CacheScope.using(s => Dedup.minhashPairs(docs, 0.5, s)) { pairs =>
-        pairs.count()
+      CacheScope.scoped {
+        Dedup.minhashPairs(docs, 0.5).count()
         throw new RuntimeException("boom")
       }
     }
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (leakedAfter(baseline).nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(leakedAfter(baseline) === Set.empty[Int])
+    assert(leakedSince(baseline) === Set.empty[Int])
+  }
+
+  test("concurrent scopes on one session: equal plans, correct results, nothing left") {
+    // Verify's shape: threads scope their own queries on the shared
+    // session. Equal plans share one CacheManager entry, so one scope's
+    // release can drop an entry the other thread still reads; that may
+    // only cost a recompute, never a wrong answer or a leaked block.
+    spark.catalog.clearCache()
+    val expected = Dedup.ppjoinPairs(docs, 0.5)
+      .orderBy("doc_a", "doc_b").collect().toSeq
+    spark.catalog.clearCache()
+    val baseline = persistentRddIds()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = (1 to 2).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
+          def call(): Seq[org.apache.spark.sql.Row] = {
+            start.await()
+            CacheScope.scoped {
+              Dedup.ppjoinPairs(docs, 0.5)
+                .orderBy("doc_a", "doc_b").collect().toSeq
+            }
+          }
+        })
+      }
+      start.countDown()
+      runs.foreach(r => assert(r.get(120, java.util.concurrent.TimeUnit.SECONDS) === expected))
+    } finally pool.shutdown()
+    assert(leakedSince(baseline) === Set.empty[Int],
+      "cached blocks outlived both concurrent scopes")
   }
 }

@@ -372,9 +372,9 @@ class SimilaritySpec extends GraftSparkSpec {
       (i, (Array(i / 1000.0f) ++ Array.fill(15)(0.1f)), 0)
     }).toDF("vec_id", "embedding", "label")
     val ckptsBefore = spark.sparkContext.getPersistentRDDs.size
-    val out = CacheScope.using(
-      s => Similarity.pcaTopComponent(vecs, iters = 8, dim = 16, scope = s))(
-      _.collect()).sortBy(_.getLong(0))
+    val out = CacheScope.scoped(
+      Similarity.pcaTopComponent(vecs, iters = 8, dim = 16).collect())
+      .sortBy(_.getLong(0))
     // storage hygiene: the 17 per-iteration localCheckpoints must not
     // outlive the scope (the CacheScopeSpec zero-blocks precondition)
     assert(spark.sparkContext.getPersistentRDDs.size === ckptsBefore)

@@ -27,6 +27,7 @@ class StreamingScdSpec extends GraftSparkSpec {
     val ckpt = Files.createTempDirectory("graft-sscd-ckpt-").toString
     val input = MemoryStream[(Long, String)]
     val dates = Map(0L -> "2000-01-01", 1L -> "2000-02-01")
+    val baseline = persistentRddIds()
     val q = StreamingScd.writer(input.toDF().toDF("k", "seg"),
       path, ckpt, "k", Seq("seg"), dates).start()
     try {
@@ -35,6 +36,9 @@ class StreamingScdSpec extends GraftSparkSpec {
       input.addData((2L, "B2"), (3L, "C"))
       q.processAllAvailable()
     } finally q.stop()
+    // each batch's checkpointed merge is released once its writes finish
+    assert(leakedSince(baseline) === Set.empty[Int],
+      "a micro-batch's checkpoint blocks outlived the batch")
 
     val got = StreamingScd.readHistory(s, path)
       .select("k", "seg", "valid_from", "valid_to", "is_current").collect()
