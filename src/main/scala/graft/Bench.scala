@@ -1,32 +1,30 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
+
 /** Driver-run benchmark: executes every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds
+  * and Spark job counts.
   *
   * Each query gets one untimed warmup execution (absorbs Janino codegen +
-  * JIT compilation, which otherwise dominates sub-second queries), then at
-  * least two timed executions driven to completion via count().
+  * JIT compilation, which otherwise dominates sub-second queries), then
+  * one timed execution per pass that writes the full result to Spark's
+  * `noop` sink — what a caller receives, so Catalyst cannot prune the
+  * final sort or the windows, joins and aggregates a `count()` never
+  * reads. The jobs each timed run submits are counted by its job group.
   *
   * Stall defense: this host exhibits intermittent multi-second JVM stalls
   * (documented in prior rounds' verdicts — identical runs vary 0.3 s vs
   * 80 s; round 7's artifact recorded 8-27x phantom regressions on
-  * byte-identical code). Three countermeasures, stall-proof BY
-  * CONSTRUCTION per the round-7 verdict:
+  * byte-identical code). Two countermeasures:
   *   1. TWO full interleaved passes over the registry — alphabetical,
   *      then reverse-alphabetical — keeping each query's MIN across all
   *      runs of both passes. A sustained stall window hits *different*
   *      queries in the two passes (opposite run order), so no single
   *      window can inflate one query family's best-of in both.
-  *   2. COVERAGE-FIRST (round 13 — round 12's contended run burned its
-  *      budget on in-pass retries and left 45 queries unmeasured): each
-  *      coverage pass takes exactly warmup + ONE timed run per query;
-  *      stall suspects (merged runs disagree >2x, or best-of exceeds 3x
-  *      the prior round's value from BENCH_PRIOR.json) are re-measured
-  *      in a FINAL bounded retry phase, most-suspicious first, spending
-  *      only leftover budget. Bounded retries mean a real regression
-  *      still surfaces; a stall does not — and can no longer starve the
-  *      rest of the registry.
-  *   3. Per-run times of queries whose merged runs disagreed (plus any
+  *   2. Per-run times of queries whose merged runs disagreed (plus any
   *      exception messages) are emitted as a SECOND short JSON line
   *      AFTER the main artifact line — the driver captures a bounded
   *      TAIL of stdout, so the detail that makes stall-vs-regression
@@ -43,10 +41,10 @@ package graft
   * timeout — rc=124, SIGTERM mid-run, nothing on stdout): two layers.
   *   1. An internal wall-clock budget (`SPARK_GRAFT_BENCH_BUDGET_S`,
   *      default 2400 s — under any plausible driver timeout). When the
-  *      budget is exceeded, measurement STOPS — remaining queries and
-  *      retries are skipped — and the three artifact lines are emitted
-  *      with `"partial":true` plus an `n_unmeasured` count, so a slow
-  *      host degrades to a partial artifact instead of no artifact.
+  *      budget is exceeded, measurement STOPS — remaining queries are
+  *      skipped — and the three artifact lines are emitted with
+  *      `"partial":true` plus an `n_unmeasured` count, so a slow host
+  *      degrades to a partial artifact instead of no artifact.
   *   2. A PROVISIONAL artifact line (same schema, flagged
   *      `"provisional_pass":0`) printed the moment pass 0 completes, and
   *      flushed — so even a hard external SIGTERM during pass 1 leaves
@@ -55,19 +53,80 @@ package graft
   *      LAST parseable line of the tail.
   */
 object Bench {
-  /** Prior-round per-query seconds from BENCH_PRIOR.json if the file
-    * exists (one JSON line in this program's own output format; parsing
-    * in [[BenchCore.parsePrior]]). `SPARK_GRAFT_PRIOR` overrides the
-    * path; `off` disables the prior entirely — the scaling sweeps run
-    * this same binary at 10× data, where the sf0.1 prior would flag
-    * every query a 3×-regression suspect and burn the retry budget. */
-  private def loadPriorFile(): String = {
-    val path = sys.env.getOrElse("SPARK_GRAFT_PRIOR", "BENCH_PRIOR.json")
-    if (path == "off") return ""
-    val f = new java.io.File(path)
-    if (!f.isFile) return ""
-    try scala.io.Source.fromFile(f, "UTF-8").mkString
-    catch { case _: Throwable => "" }
+
+  /** Runs registry queries for the harness. Each run writes the full
+    * result to the `noop` sink under its own Spark job group: the
+    * per-query cap cancels that group, and a listener counts the jobs
+    * started under each timed run's group.
+    *
+    * PER-QUERY wall cap (round 13): the budget check in BenchCore fires
+    * BETWEEN queries, so one wedged execution could previously absorb
+    * the entire budget (observed: a contended-host graph query crawling
+    * at localCheckpoint granularity for >20 min). A watchdog timer
+    * cancels the run's job group after `capS` — the action throws, the
+    * harness records the error (or keeps the other pass's clean run),
+    * and coverage of the remaining registry is preserved. The cap is
+    * ~25x the slowest sf0.1 query's best full-result run, so only true
+    * pathology (stall, wedge, runaway plan) is ever cut.
+    */
+  private[graft] final class Runner(spark: SparkSession, sfDir: String, capS: Double) {
+    private val sc = spark.sparkContext
+    private val watchdog = new java.util.Timer("bench-query-cap", true)
+
+    // a warmup runs under its own group, so only timed runs are counted
+    private def group(name: String, timed: Boolean): String =
+      (if (timed) "bench-timed-" else "bench-warmup-") + name
+
+    private val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("bench-timed-"))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    })
+
+    // JVM-thread canary (round 16): the r15 accumulated-state pathology
+    // announced itself as monotonic thread growth (7,800+ live threads by
+    // the dd_ family). Sample the live thread count after every query;
+    // warn on stderr each time it crosses another +500, and report the
+    // per-family max at the end — so a future BENCH artifact that reads
+    // slow in the back half carries its own heap-pathology evidence.
+    val familyThreads = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    @volatile private var threadWarnAt = 1000
+    private def sampleThreads(name: String): Unit = {
+      val n = Thread.activeCount()
+      val fam = name.takeWhile(_ != '_')
+      familyThreads(fam) = math.max(familyThreads.getOrElse(fam, 0), n)
+      if (n >= threadWarnAt) {
+        threadWarnAt = n + 500
+        System.err.println(s"[bench-canary] live threads=$n after $name")
+      }
+    }
+
+    def run(name: String, timed: Boolean): Unit = {
+      val g = group(name, timed)
+      // interruptOnCancel frees the executor threads too (a cancelled
+      // cartesian-ish stage would otherwise keep all 32 cores busy as
+      // zombies, crawling every subsequent measurement)
+      sc.setJobGroup(g, s"bench per-query cap ${capS}s", interruptOnCancel = true)
+      @volatile var fired = false
+      val tt = new java.util.TimerTask {
+        def run(): Unit = { fired = true; sc.cancelJobGroup(g) }
+      }
+      watchdog.schedule(tt, (capS * 1000).toLong)
+      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        if (fired) throw new RuntimeException(f"capped>$capS%.0fs", e) else throw e
+      } finally { tt.cancel(); sc.clearJobGroup(); sampleThreads(name) }
+    }
+
+    /** Jobs started by `name`'s timed runs since the last call. Waits
+      * until every queued listener event is delivered first: job-start
+      * events are posted before the action returns, but arrive later. */
+    def timedJobs(name: String): Int = {
+      Bridge.drainListenerBus(sc)
+      Option(jobs.remove(group(name, timed = true))).fold(0)(_.intValue)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -85,125 +144,57 @@ object Bench {
     // the session's SparkConf reads (see Engine.session).
     System.setProperty("spark.cleaner.periodicGC.interval", "60s")
     val spark = Engine.session(appName = "graft-bench", cores = cpus.toInt)
-    // SPARK_GRAFT_SHUFFLE (default = cpus, Engine.session's): the
-    // scaling sweeps run this binary at 10x data with shuffle partitions
-    // scaled alongside — the knob every real deployment turns with data
-    // size (SCALING.md §"Fixed-parallelism drift").
+    // SPARK_GRAFT_SHUFFLE (default = cpus, Engine.session's): a scaling
+    // sweep runs this binary at 10x data with shuffle partitions scaled
+    // alongside — the knob every real deployment turns with data size
+    // (SCALING.md §"Fixed-parallelism drift").
     sys.env.get("SPARK_GRAFT_SHUFFLE")
       .foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    val priorText = loadPriorFile()
-    // parse failures degrade to an empty prior, never a startup crash —
-    // update_prior.py writes BENCH_PRIOR.json non-atomically, and a
-    // truncated file taking down Bench before the first query would be
-    // the round-9 no-artifact mode all over again
-    val prior =
-      try BenchCore.parsePrior(priorText)
-      catch { case _: Throwable => Map.empty[String, Double] }
-    val coldFloor =
-      try BenchCore.parseColdFloor(priorText)
-      catch { case _: Throwable => Map.empty[String, Double] }
     // optional query filter for local iteration and the scaling sweeps
     // (SparkEntry.selected); unset = every registered query.
     val only = SparkEntry.onlyPrefixes
     val selected = SparkEntry.selected()
-    val fnByName = selected.toMap
     // internal deadline, kept under the driver's kill timeout so the
     // artifact always prints from inside the JVM (see scaladoc)
     val wallBudgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(2400.0)
-    // PER-QUERY wall cap (round 13): the budget check in BenchCore fires
-    // BETWEEN queries, so one wedged execution could previously absorb
-    // the entire budget (observed: a contended-host graph query crawling
-    // at localCheckpoint granularity for >20 min). A watchdog timer
-    // cancels the query's Spark job group after capS — count() throws,
-    // the harness records the error (or keeps the other pass's clean
-    // run), and coverage of the remaining registry is preserved. The cap
-    // is ~37x the slowest clean sf0.1 query, so only true pathology
-    // (stall, wedge, runaway plan) is ever cut.
     val capS = sys.env.get("SPARK_GRAFT_QUERY_CAP_S")
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(150.0)
-    val watchdog = new java.util.Timer("bench-query-cap", true)
-    // JVM-thread canary (round 16): the r15 accumulated-state pathology
-    // announced itself as monotonic thread growth (7,800+ live threads by
-    // the dd_ family). Sample the live thread count after every query;
-    // warn on stderr each time it crosses another +500, and report the
-    // per-family max at the end — so a future BENCH artifact that reads
-    // slow in the back half carries its own heap-pathology evidence.
-    val familyThreads = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    @volatile var threadWarnAt = 1000
-    def sampleThreads(name: String): Unit = {
-      val n = Thread.activeCount()
-      val fam = name.takeWhile(_ != '_')
-      familyThreads(fam) = math.max(familyThreads.getOrElse(fam, 0), n)
-      if (n >= threadWarnAt) {
-        threadWarnAt = n + 500
-        System.err.println(s"[bench-canary] live threads=$n after $name")
-      }
-    }
-    def runCapped(name: String): Unit = {
-      val sc = spark.sparkContext
-      val group = s"bench-$name"
-      // interruptOnCancel frees the executor threads too (a cancelled
-      // cartesian-ish stage would otherwise keep all 32 cores busy as
-      // zombies, crawling every subsequent measurement)
-      sc.setJobGroup(group, s"bench per-query cap ${capS}s", interruptOnCancel = true)
-      @volatile var fired = false
-      val tt = new java.util.TimerTask {
-        def run(): Unit = { fired = true; sc.cancelJobGroup(group) }
-      }
-      watchdog.schedule(tt, (capS * 1000).toLong)
-      try { fnByName(name)(spark, sfDir).count(); () }
-      catch { case e: Throwable =>
-        if (fired) throw new RuntimeException(f"capped>$capS%.0fs", e) else throw e
-      } finally { tt.cancel(); sc.clearJobGroup(); sampleThreads(name) }
-    }
-    // measurement mechanics (two passes, best-of, stall retries, budget
-    // truncation) + artifact-line builders live in BenchCore.Harness so
-    // the deadline defenses are unit-tested with a fake clock
+    val runner = new Runner(spark, sfDir, capS)
+    // measurement mechanics (two passes, best-of, budget truncation) +
+    // artifact-line builders live in BenchCore.Harness so the deadline
+    // defenses are unit-tested with a fake clock
     val h = new BenchCore.Harness(
       selected.map(_._1),
-      runCapped,
+      runner.run,
       () => System.nanoTime(),
       wallBudgetS,
-      prior,
+      runner.timedJobs,
       // one cache scope per visit: the warmup fills the operator caches
-      // the timed runs then read, keeping every timed run warm-cache
+      // the timed run then reads, keeping every timed run warm-cache
       // (the methodology of every prior round's artifact; cold timings
       // measured ~4x higher on the cache-heavy dd_ queries and are not
       // comparable), and the visit's storage is released when it ends
       visit = body => graft.operators.CacheScope.scoped(body()),
       // e2e streaming queries (gov_*) replay their whole stream from
       // batch 0 every run — a warmup is a wasted third replay
-      noWarmup = SparkEntry.noWarmupQueries,
-      // degraded-visit expected cost for the cache_class queries (their
-      // single cold run legitimately reads up to ~15x warm prior) — see
-      // the recovery-window scaladoc in BenchCore
-      coldPrior = coldFloor)
+      noWarmup = SparkEntry.noWarmupQueries)
     val onlyTag = only.map(p => s""""only":"${p.mkString(",")}",""").getOrElse("")
     h.runPass(0)
     // deadline insurance: one complete parseable line on stdout the
     // moment pass 0 is done, before pass 1 risks the driver timeout
     println(h.artifactLine(sfDir, onlyTag,
-      s""""provisional_pass":0,${if (h.truncated) "\"partial\":true," else ""}${if (h.degraded) "\"degraded\":true," else ""}"""))
+      s""""provisional_pass":0,${if (h.truncated) "\"partial\":true," else ""}"""))
     System.out.flush()
     h.runPass(1)
-    println(h.artifactLine(sfDir, onlyTag,
-      s""""provisional_pass":1,${if (h.truncated) "\"partial\":true," else ""}${if (h.degraded) "\"degraded\":true," else ""}"""))
-    System.out.flush()
-    // leftover budget only: bounded re-measure of stall suspects
-    // (coverage-first — round 12 lost 45 queries to in-pass retries)
-    h.retryPass()
-    // healthy-host-only third coverage pass: sharpen best-of samples
-    h.polishPass()
     // thread canary summary (stderr — diagnostic, not part of the
     // 3-line artifact contract the driver parses)
     System.err.println("[bench-canary] per-family max live threads: " +
-      familyThreads.map { case (f, n) => s"$f=$n" }.mkString(" "))
+      runner.familyThreads.map { case (f, n) => s"$f=$n" }.mkString(" "))
     // a deadline-truncated run is labelled so its partial total can't be
     // mistaken for a full benchmark artifact; unmeasured != failed
     val partialTag =
-      (if (h.truncated) s""""partial":true,"n_unmeasured":${h.nUnmeasured},""" else "") +
-        (if (h.degraded) """"degraded":true,""" else "")
+      if (h.truncated) s""""partial":true,"n_unmeasured":${h.nUnmeasured},""" else ""
     // The consumer keeps only a bounded TAIL of stdout (~2000 chars —
     // observed in BENCH_r07.json) and the full-registry queries map is
     // ~3500 chars, so the map's HEAD is always truncated away.
@@ -217,7 +208,7 @@ object Bench {
     println(artifact)
     // SECOND, SHORT line: per-run detail for queries whose merged runs
     // disagreed by >2x (a stall or a bimodal plan), harness wall seconds
-    // (warmups + all runs of both passes + retries — wall >> value is the
+    // (warmups + all runs of both passes — wall >> value is the
     // signature of a stalled host), and the headline total again. Emitted
     // AFTER the main line so the bounded stdout tail always keeps it
     // whole — and if the consumer JSON-parses the tail's last line, it

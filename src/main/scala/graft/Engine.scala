@@ -17,8 +17,8 @@ object Engine {
     *
     * A caller that needs more adds it around the call, not as a
     * parameter. A runtime SQL conf is set on the returned session with
-    * `spark.conf.set` (Bench's shuffle override, PlanFingerprint's pinned
-    * planner confs). A static conf is set as a `spark.*` JVM system
+    * `spark.conf.set` (Bench's `SPARK_GRAFT_SHUFFLE` override,
+    * PlanFingerprint's pinned planner confs). A static conf is set as a `spark.*` JVM system
     * property just before the call: the builder's `SparkConf` reads those
     * (Bench's `spark.cleaner.periodicGC.interval`, the test warehouse
     * dir).

@@ -41,11 +41,11 @@ object SparkEntry {
   def onlyPrefixes: Option[Seq[String]] =
     sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
 
-  /** The queries Bench and the scaling sweep run, sorted by name: those
-    * matching [[onlyPrefixes]], minus the exact names in
-    * `SPARK_GRAFT_SKIP` (comma-separated). The scaling sweeps skip the
-    * declared O(n²) oracle baselines, whose blowup at 10× data is by
-    * design (each has a registered bucketed scale path that IS measured). */
+  /** The queries Bench runs, sorted by name: those matching
+    * [[onlyPrefixes]], minus the exact names in `SPARK_GRAFT_SKIP`
+    * (comma-separated). A scaling sweep's Bench runs skip the declared
+    * O(n²) oracle baselines, whose blowup at 10× data is by design (each
+    * has a registered bucketed scale path that IS measured). */
   def selected(): Seq[(String, (SparkSession, String) => DataFrame)] = {
     val skip = sys.env.get("SPARK_GRAFT_SKIP")
       .map(_.split(',').toSet).getOrElse(Set.empty[String])
@@ -61,6 +61,6 @@ object SparkEntry {
 
   /** Bench no-warmup class (see [[graft.queries.QueryFamily.noWarmup]]):
     * queries whose every execution is a from-scratch stream replay, so a
-    * warmup run warms nothing and only triples their bench cost. */
+    * warmup run warms nothing and only doubles their bench cost. */
   def noWarmupQueries: Set[String] = families.flatMap(_.noWarmup).toSet
 }

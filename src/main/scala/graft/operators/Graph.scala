@@ -16,34 +16,6 @@ object Graph {
 
   import CacheScope.releaseCheckpoint
 
-  /** Rounds-to-fixed-point of the most recent invocation of each
-    * convergence-iterated operator (diagnostic only — written at the end
-    * of each call, read+cleared by the scaling sweep's
-    * [[graft.tools.Scaling]] per-query drain). The scaling question this
-    * answers: per-round cost is provably linear, so an operator-family
-    * ratio above ~10× at 10× data is benign only if ROUNDS stay flat —
-    * the iteration column in SCALING.md either proves that or names the
-    * growth. THREAD-LOCAL: the iterative loops run on the thread that
-    * built the query, so a timed-out query's zombie thread (Scaling's
-    * cancel is cooperative) writes into its own log, never into the next
-    * query's — drain from the same thread that ran the operator. */
-  private val iterLog =
-    new ThreadLocal[scala.collection.mutable.Map[String, Int]] {
-      override def initialValue() = scala.collection.mutable.Map.empty
-    }
-  private[graft] def lastIterations: scala.collection.mutable.Map[String, Int] =
-    iterLog.get()
-
-  /** Format and clear the calling thread's iteration log: "op:rounds"
-    * comma-joined, sorted; empty string when no iterative operator ran. */
-  def drainIterationLog(): String = {
-    val m = iterLog.get()
-    val s = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k:$v" }.mkString(",")
-    m.clear()
-    s
-  }
-
   /** Connected components by iterative min-label propagation.
     *
     * `edges` is an undirected edge list with two long columns (src, dst by
@@ -70,7 +42,9 @@ object Graph {
     * (was 1.5: the eager localCheckpoint plus an every-second-round
     * isEmpty over the checkpointed blocks), and the free per-round check
     * also stops exactly at the first no-op round instead of on the next
-    * even one. (A round-17 experiment batching TWO propagation rounds
+    * even one. Rounds therefore show up as Spark jobs: a query whose CC
+    * needs more rounds at a larger scale records more `jobs` in
+    * `graft.Bench`'s artifact. (A round-17 experiment batching TWO propagation rounds
     * per checkpoint measured 1.3-2× SLOWER across the CC query family —
     * the in-block duplicate subtrees of the pointer-jump self-join are
     * not fully deduped by exchange reuse — so rounds stay
@@ -132,7 +106,6 @@ object Graph {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connectedComponents hit maxIter=$maxIter without converging; " +
           "cluster labels may be partially propagated")
-    lastIterations("connectedComponents") = iter
     labels
   }
 
@@ -461,7 +434,6 @@ object Graph {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"kCore hit maxIter=$maxIter without converging; " +
           "the returned subgraph may still contain sub-k vertices")
-    lastIterations("kCore") = iter
     sym.groupBy(col("a")).agg(count(lit(1)).as("core_degree"))
       .select(col("a").as("id"), col("core_degree"))
   }
@@ -486,20 +458,7 @@ object Graph {
       .filter(col("a") =!= col("b"))
     val cols = newEdges.columns
     val e = newEdges.select(col(cols(0)).as("a"), col(cols(1)).as("b"))
-    // snapshot any PRE-EXISTING standalone-CC entry on this thread: the
-    // re-key below must not swallow a standalone connectedComponents run
-    // that happened earlier on the same thread (its rounds would be
-    // misattributed to the merge and the standalone entry lost)
-    val standalone = lastIterations.get("connectedComponents")
-    val out = connectedComponents(star.unionByName(e))
-    // CC's loop ran eagerly above (localCheckpoint per round), so its log
-    // entry is current — RE-key it (remove the inner entry) so the sweep
-    // attributes the rounds to the merge instead of double-reporting a
-    // phantom standalone CC run; then restore the snapshot
-    lastIterations.remove("connectedComponents")
-      .foreach(n => lastIterations("mergeComponents") = n)
-    standalone.foreach(n => lastIterations("connectedComponents") = n)
-    out
+    connectedComponents(star.unionByName(e))
   }
 
   /** Newman modularity of a vertex partition (Newman & Girvan 2004) —

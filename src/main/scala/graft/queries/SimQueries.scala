@@ -99,8 +99,8 @@ object SimQueries extends QueryFamily {
     // the TUNED layout: nCells derived from the corpus count by the
     // deterministic rule max(16, n/125) — constant expected cell
     // population, so per-query probe cost stays FLAT as the corpus grows
-    // (nCells 16 at sf0.1 ties to the demo layout and BENCH_PRIOR; 160
-    // at sf1 — the SCALING.md tuned column). The oracle replicates the
+    // (nCells 16 at sf0.1 ties to the demo layout; 160 at sf1 — the
+    // SCALING.md tuned column). The oracle replicates the
     // same rule in SQL, so the row stays green at any driver scale.
     "sim_topk_ivf_tuned" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
@@ -569,7 +569,7 @@ object SimQueries extends QueryFamily {
 
   /** The TUNED-layout IVF oracle: identical pipeline, but `nCells` is the
     * deterministic corpus-count rule `max(16, n/125)` (constant expected
-    * cell population ~125 — the FAISS-style sizing ScalingTuned measures)
+    * cell population ~125 — FAISS-style sizing)
     * replicated inside the SQL, so the oracle holds at ANY scale the
     * driver runs it. */
   private def ivfTunedOracleSql: String =

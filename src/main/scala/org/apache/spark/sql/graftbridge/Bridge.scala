@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -22,4 +23,9 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** Wait until every queued listener event has been delivered, so that
+    * counts a listener keeps include all jobs of an action that returned
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

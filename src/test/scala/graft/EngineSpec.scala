@@ -41,4 +41,27 @@ class EngineSpec extends GraftSparkSpec {
     }.map(_.getPath)
     assert(builders === Seq("src/main/scala/graft/Engine.scala"))
   }
+
+  test("the mains under src/main are exactly the kept runners and tools") {
+    // one registry runner (Bench) and a fixed tool set: a new one-off
+    // probe main belongs in one of these, not beside them
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, "run from the repository root")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Seq.empty
+    val obj = """(?m)^\s*(?:private(?:\[\w+\])?\s+)?object\s+(\w+)""".r
+    val entry = """def\s+main\s*\(|extends\s+App\b""".r
+    val mains = scalaFiles(root).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      // each entry point belongs to the last object declared before it
+      entry.findAllMatchIn(text).map { m =>
+        obj.findAllMatchIn(text.substring(0, m.end)).toSeq.lastOption
+          .fold(s"<no object> in ${f.getPath}")(_.group(1))
+      }
+    }
+    assert(mains.sorted ===
+      Seq("Bench", "Coverage", "Explain", "PlanFingerprint", "ScaleUp", "Verify"))
+  }
 }

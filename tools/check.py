@@ -1,12 +1,17 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [<verifyOutDir> ...]
 
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 same sf tables, then compares: schema (column names), row count, and a hash
 of all values with columns sorted by name (mirroring the driver's compare).
+
+With several out dirs (repeated Verify runs over the same sfDir), each
+distinct oracle SQL text runs once and its result is compared against every
+dir; each dir's report is headed by its path, a per-dir summary follows, and
+the exit status is non-zero if any dir fails. One dir prints as it always has.
 """
 import json
 import sys
@@ -36,13 +41,21 @@ def frame_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if Path(p).exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+def check_dir(out_dir, con, oracle_results):
+    """Print one PASS/FAIL line per oracle of `out_dir` and the totals;
+    returns (n_pass, n_fail). `oracle_results` caches each SQL text's
+    canonical DuckDB result (or its exception) across calls."""
+    def oracle_df(sql):
+        if sql not in oracle_results:
+            try:
+                oracle_results[sql] = canon(con.sql(sql).df())
+            except Exception as e:
+                oracle_results[sql] = e
+        r = oracle_results[sql]
+        if isinstance(r, Exception):
+            raise r
+        return r
+
     oracle = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
     n_pass = n_fail = 0
     for name in sorted(oracle):
@@ -53,7 +66,7 @@ def main():
             continue
         try:
             spark_df = canon(pd.read_parquet(qdir))
-            duck_df = canon(con.sql(oracle[name]).df())
+            duck_df = oracle_df(oracle[name])
         except Exception as e:
             print(f"FAIL {name}: {e}")
             n_fail += 1
@@ -75,7 +88,29 @@ def main():
             print(f"PASS {name} ({len(spark_df)} rows)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    return n_pass, n_fail
+
+
+def main():
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    sf_dir, out_dirs = sys.argv[1], sys.argv[2:]
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if Path(p).exists():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    oracle_results = {}
+    totals = []
+    for out_dir in out_dirs:
+        if len(out_dirs) > 1:
+            print(f"== {out_dir}")
+        totals.append(check_dir(out_dir, con, oracle_results))
+    if len(out_dirs) > 1:
+        print()
+        for out_dir, (n_pass, n_fail) in zip(out_dirs, totals):
+            print(f"{'PASS' if n_fail == 0 else 'FAIL'} {out_dir}: {n_pass} pass, {n_fail} fail")
+    sys.exit(1 if any(n_fail for _, n_fail in totals) else 0)
 
 
 if __name__ == "__main__":
