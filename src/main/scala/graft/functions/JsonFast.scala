@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Allocation-free scalar extraction from a flat JSON object.
@@ -95,33 +94,20 @@ object JsonFast {
 
   /** Column API: `json_get(col("props"), "k")`. */
   def json_get(json: Column, key: String): Column =
-    Bridge.column(JsonGetScalar(Bridge.expression(json), key))
+    Bridge.column(JsonGet(Bridge.expression(json), key))
 }
 
-/** Catalyst expression wrapping [[JsonFast.extract]] with full codegen:
-  * stays inside WholeStageCodegen (a static call, no virtual dispatch, no
-  * parser objects). */
-case class JsonGetScalar(child: Expression, key: String)
-    extends UnaryExpression {
+/** `json_get(string, key) -> string`: the optimizer replaces it with the
+  * kernel call [[JsonFast.extract]] (a static call inside whole-stage
+  * codegen, no parser objects). The key is a parameter, not a
+  * child, so an unaliased call is named `json_get(<json>)`. */
+case class JsonGet(child: Expression, key: String)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "json_get"
 
-  private lazy val keyUtf8 = UTF8String.fromString(key)
-
-  override def nullSafeEval(input: Any): Any =
-    JsonFast.extract(input.asInstanceOf[UTF8String], keyUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val keyRef = ctx.addReferenceObj("jsonKey", keyUtf8, classOf[UTF8String].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.JsonFast.extract($c, $keyRef);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
+  override lazy val replacement: Expression = GraftFunctions.kernel(JsonFast,
+    "extract", StringType, Seq(child, Literal(key)), returnNullable = true)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

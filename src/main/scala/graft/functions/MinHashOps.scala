@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** One-pass MinHash signature kernel.
   *
@@ -19,8 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 object MinHashKernel {
 
   /** shingles → k-long signature. Returns null for empty shingle sets
-    * (handled at the expression level) so degenerate docs never collide
-    * into one LSH bucket. */
+    * so degenerate docs never collide into one LSH bucket. */
   def signature(sh: ArrayData, a: Array[Long], b: Array[Long], prime: Long): ArrayData = {
     val n = sh.numElements()
     if (n == 0) return null
@@ -42,35 +40,16 @@ object MinHashKernel {
     new GenericArrayData(sig)
   }
 
+  /** `minhash_signature(array<string>) -> array<long>`, null on an empty
+    * array: [[signature]] as a kernel call, the coefficient arrays passed
+    * by reference. */
   def minhashSignature(shingles: Column, a: Array[Long], b: Array[Long],
-      prime: Long): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(shingles), a, b, prime))
-}
-
-/** `minhash_signature(array<string>) -> array<long>` (codegen). */
-case class MinHashSignature(child: Expression, a: Array[Long], b: Array[Long],
-    prime: Long) extends UnaryExpression {
-
-  require(a.length == b.length, "coefficient arrays must align")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.signature(input.asInstanceOf[ArrayData], a, b, prime)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhA", a, "long[]")
-    val bRef = ctx.addReferenceObj("mhB", b, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.MinHashKernel.signature($c, $aRef, $bRef, ${prime}L);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
+      prime: Long): Column = {
+    require(a.length == b.length, "coefficient arrays must align")
+    Bridge.column(GraftFunctions.kernel(this, "signature",
+      ArrayType(LongType, containsNull = false),
+      Seq(Bridge.expression(shingles), Literal.fromObject(a), Literal.fromObject(b),
+        Literal(prime)),
+      returnNullable = true))
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -4,7 +4,6 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
@@ -56,14 +55,12 @@ object SimHashKernel {
     java.lang.Long.valueOf(sig)
   }
 
-  /** `simhash_signature(array<string>) -> long`, null on an empty array,
-    * as a Catalyst `StaticInvoke`: codegen emits the direct static call
-    * to [[signature]], the interpreted path finds it by reflection, and a
-    * null array gives a null result without calling it. */
+  /** `simhash_signature(array<string>) -> long`, null on an empty array:
+    * [[signature]] as a kernel call. */
   def simhashSignature(shingles: Column, bits: Int, useMd5: Boolean): Column = {
     require(bits > 0 && bits <= 64)
-    Bridge.column(StaticInvoke(getClass, LongType, "signature",
+    Bridge.column(GraftFunctions.kernel(this, "signature", LongType,
       Seq(Bridge.expression(shingles), Literal(bits), Literal(useMd5)),
-      propagateNull = true, returnNullable = true))
+      returnNullable = true))
   }
 }

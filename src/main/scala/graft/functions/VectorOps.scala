@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
   IntegerType, LongType, StructField, StructType}
 
 /** Native vector kernels for the similarity/dedup hot path.
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   * The declarative formulation (`aggregate(zip_with(...))`) evaluates
   * higher-order functions interpretively — measured ~20 µs per 64-dim
   * cosine; a 100 TB ANN pass would spend its life in lambda dispatch.
-  * [[CosineSimilarity]] runs the identical IEEE operation sequence
+  * [[cosineFloat]] and [[cosineDouble]] run the identical IEEE operation sequence
   * (sequential left fold: ((0+x₁)+x₂)+…, sqrt, multiply, divide) as a tight
   * primitive loop inside whole-stage codegen — bit-identical results,
   * ~100× faster.
@@ -262,116 +261,89 @@ object VectorKernels {
   /** `pq_argmin(array<double>, array<struct<code:long, cw:array<double>>>)
     * -> struct<dist, code, cw>` — [[pqArgmin]]. */
   def pq_argmin(sv: Column, cws: Column): Column =
-    kernel("pqArgmin", StructType(Seq(
+    Bridge.column(GraftFunctions.kernel(this, "pqArgmin", StructType(Seq(
       StructField("dist", DoubleType, nullable = false),
       StructField("code", LongType, nullable = false),
-      StructField("cw", ArrayType(DoubleType), nullable = true))), sv, cws)
+      StructField("cw", ArrayType(DoubleType), nullable = true))),
+      Seq(sv, cws).map(Bridge.expression)))
 
   /** `ivf_argmax(array<double>, array<struct<cell:int, cv:array<double>>>)
     * -> int` — [[ivfArgmax]]. */
   def ivf_argmax(v: Column, cents: Column): Column =
-    kernel("ivfArgmax", IntegerType, v, cents)
+    Bridge.column(GraftFunctions.kernel(this, "ivfArgmax", IntegerType,
+      Seq(v, cents).map(Bridge.expression)))
 
   /** `ivf_probes(array<double>, array<struct<cell:int, cv:array<double>>>)
     * -> array<int>` — [[ivfProbeCells]]. */
   def ivf_probes(qv: Column, cents: Column, nProbe: Int): Column = {
     require(nProbe >= 1, "nProbe must be >= 1")
-    kernel("ivfProbeCells", ArrayType(IntegerType, containsNull = false),
-      qv, cents, lit(nProbe))
+    Bridge.column(GraftFunctions.kernel(this, "ivfProbeCells",
+      ArrayType(IntegerType, containsNull = false),
+      Seq(Bridge.expression(qv), Bridge.expression(cents), Literal(nProbe))))
   }
 
   /** `sq8_dequant(array<double>, array<struct<pos:int, mn:double, mx:double>>)
     * -> array<double>` — [[sq8Dequant]]. */
   def sq8_dequant(v: Column, st: Column): Column =
-    kernel("sq8Dequant", ArrayType(DoubleType, containsNull = false), v, st)
+    Bridge.column(GraftFunctions.kernel(this, "sq8Dequant",
+      ArrayType(DoubleType, containsNull = false), Seq(v, st).map(Bridge.expression)))
 
   /** `sorted_overlap(array<struct<df,h>>, array<struct<df,h>>) -> int` —
     * [[sortedOverlapCount]]. */
   def sorted_overlap(a: Column, b: Column): Column =
-    kernel("sortedOverlapCount", IntegerType, a, b)
+    Bridge.column(GraftFunctions.kernel(this, "sortedOverlapCount", IntegerType,
+      Seq(a, b).map(Bridge.expression)))
 
-  /** One of the kernels above as a Catalyst `StaticInvoke`: codegen emits
-    * the direct static call `graft.functions.VectorKernels.<name>(...)`,
-    * the interpreted path finds the same method by reflection, and a null
-    * argument gives a null result without calling the kernel. No input
-    * types are declared, so the analyzer inserts no implicit casts in
-    * front of what the kernel reads; the operators fix the column types. */
-  private def kernel(name: String, dataType: DataType, args: Column*): Column =
-    Bridge.column(StaticInvoke(getClass, dataType, name,
-      args.map(Bridge.expression), propagateNull = true, returnNullable = false))
+  /** The float or double variant of a kernel, by a vector's element type. */
+  private[functions] def byElement(v: Expression, float: String, double: String): String =
+    v.dataType match {
+      case ArrayType(FloatType, _) => float
+      case _ => double
+    }
 }
 
-/** `cosine(array<float|double>, array<float|double>) -> double`, full
-  * whole-stage codegen via a static kernel call. Null-intolerant on the
-  * array itself; element nulls are not supported (dense vectors). */
+/** `cosine(array<float|double>, array<float|double>) -> double`:
+  * [[VectorKernels.cosineFloat]] or [[VectorKernels.cosineDouble]] as a
+  * kernel call, chosen from the resolved element type. Null-intolerant on
+  * the array itself; element nulls are not supported (dense vectors). */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression] {
 
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine"
 
-  private lazy val isFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(lt, _), ArrayType(rt, _))
           if lt == rt && (lt == FloatType || lt == DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckResult.TypeCheckSuccess
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"cosine requires two array<float> or two array<double>, " +
             s"got ${left.dataType.sql} / ${right.dataType.sql}")
     }
-  }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (isFloat)
-      VectorKernels.cosineFloat(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    else
-      VectorKernels.cosineDouble(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel =
-      if (isFloat) "graft.functions.VectorKernels.cosineFloat"
-      else "graft.functions.VectorKernels.cosineDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $kernel($a, $b);")
-  }
+  override lazy val replacement: Expression = GraftFunctions.kernel(VectorKernels,
+    VectorKernels.byElement(left, "cosineFloat", "cosineDouble"), DoubleType,
+    Seq(left, right))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** `lsh_bucket(array<float>) -> long`: all hyperplane sign bits in one
-  * codegen'd pass (the declarative form pays nBits interpreted
-  * higher-order-function folds per row). */
+/** `lsh_bucket(array<float|double>) -> long`: all hyperplane sign bits in
+  * one pass ([[VectorKernels.lshBits]] / [[VectorKernels.lshBitsDouble]];
+  * float corpus columns and double derived vectors, e.g. the MIPS
+  * norm-augmented view, bucket through the same plane constants). */
 case class LshBucketBits(child: Expression, planes: Array[Array[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
-  override def dataType: DataType = LongType
   override def prettyName: String = "lsh_bucket"
 
-  // float corpus columns and double derived vectors (e.g. the MIPS
-  // norm-augmented view) both bucket through the same plane constants
-  private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(input: Any): Any =
-    if (isFloat) VectorKernels.lshBits(input.asInstanceOf[ArrayData], planes)
-    else VectorKernels.lshBitsDouble(input.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("lshPlanes", planes, "double[][]")
-    val kernel =
-      if (isFloat) "graft.functions.VectorKernels.lshBits"
-      else "graft.functions.VectorKernels.lshBitsDouble"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $kernel($c, $planesRef);")
-  }
+  override lazy val replacement: Expression = GraftFunctions.kernel(VectorKernels,
+    VectorKernels.byElement(child, "lshBits", "lshBitsDouble"), LongType,
+    Seq(child, Literal.fromObject(planes)))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-

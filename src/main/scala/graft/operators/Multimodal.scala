@@ -427,9 +427,6 @@ object Multimodal {
   /** Lock-free replacement for `AudioSystem.getAudioInputStream(bytes)`:
     * probe the resolved readers in SPI order; each probe gets a fresh
     * in-memory stream (rejecting readers may consume header bytes). */
-  private[graft] def probeOpenWav(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream =
-    openWav(bytes)
-
   private def openWav(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
     val rs = wavReaders
     var i = 0

@@ -155,7 +155,7 @@ object Similarity {
   }
 
   /** Sign-LSH bucket id: nBits hyperplane sign bits packed into a long
-    * via the one-pass native kernel ([[graft.functions.LshBucketBits]]).
+    * via the one-pass native kernel ([[graft.functions.VectorKernels.lshBits]]).
     * Vectors with high cosine land in the same bucket with probability
     * (1 - θ/π)^nBits. */
   def lshBucket(v: Column, nBits: Int, dim: Int): Column =

@@ -28,13 +28,6 @@ import graft.operators.CacheScope
   */
 object PlanFingerprint {
 
-  /** Queries whose PLAN is inherently run-dependent and therefore not
-    * fingerprintable: convergence-iterated graph loops embed a
-    * data-dependent number of localCheckpoint generations only when the
-    * registry's fixture changes — none today; keep the hook for the
-    * future rather than silently skipping. */
-  val excluded: Set[String] = Set.empty
-
   /** Multiset of physical operator class names, sorted, as one line.
     * `ReusedExchangeExec` is expanded into the full referenced subtree
     * (here deterministic — planning-time dedup — but expanded anyway so
@@ -136,7 +129,6 @@ object PlanFingerprint {
     pinned.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (name, _) => excluded(name) || excludedSf01(name) }
         .filter { case (name, _) => names.isEmpty || names(name) }
         .map { case (name, fn) =>
           name -> CacheScope.scoped(fingerprintFinal(fn(spark, sfDir)))
@@ -159,7 +151,6 @@ object PlanFingerprint {
     pinned.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (name, _) => excluded(name) }
         .map { case (name, fn) =>
           // per-query cache isolation, like fingerprintAllFinal (round
           // 16): registry lambdas ambient-cache multi-consumer frames,
@@ -176,26 +167,6 @@ object PlanFingerprint {
 
   val goldenPath = "PLAN_FINGERPRINTS.txt"
   val goldenPathSf01 = "PLAN_FINGERPRINTS_SF01.txt"
-
-  /** Escape hatch for any query whose AQE-FINAL plan turns out not to be
-    * run-deterministic at sf0.1 EVEN AFTER the [[aqeRacyClasses]]
-    * canonicalization. A query excluded here keeps its STATIC sf0.001
-    * fingerprint gate.
-    *
-    * Round-16 history: `sim_topk_pq_ivf_refine` (the r15 judge-JVM
-    * failure) was briefly excluded here after the determinism probe
-    * (`runMain graft.tools.PlanFingerprint sf01
-    * only=sim_topk_pq_ivf_refine repeat=6`) reproduced the flap — 6
-    * same-JVM same-config passes, THREE distinct multisets, drifting
-    * only in SortExec/WindowGroupLimitExec/AQEShuffleReadExec/
-    * ShuffleExchangeExec/InputAdapter/WholeStageCodegenExec. Then
-    * whole-registry regens flapped FOUR MORE queries on exactly the
-    * same classes (two of them stable across isolated probes —
-    * JVM-wide-state-dependent raciness), so the per-query exclusion was
-    * replaced by excluding those six racy classes from the final
-    * multiset itself (see [[aqeRacyClasses]]) and every query is back
-    * under the gate. */
-  val excludedSf01: Set[String] = Set.empty
 
   /** Current build round. Single source: the committed `ROUND` file
     * (one integer, bumped by the builder at the start of each round) —
@@ -253,8 +224,8 @@ object PlanFingerprint {
     *   - append `only=name1,name2 repeat=N` — determinism probe: compute
     *     the selected queries' fingerprints N times in this JVM and
     *     print each pass to stdout (no golden write). A query whose
-    *     passes disagree is AQE-nondeterministic and belongs in
-    *     `excludedSf01` with the diff quoted in its scaladoc.
+    *     passes disagree is AQE-nondeterministic; the classes it
+    *     drifts on are candidates for [[aqeRacyClasses]].
     */
   def main(args: Array[String]): Unit = {
     val sf01Mode = args.headOption.contains("sf01")
@@ -269,9 +240,6 @@ object PlanFingerprint {
     val out = positional.lift(1).getOrElse(if (sf01Mode) goldenPathSf01 else goldenPath)
     val spark = Engine.session(cores = if (sf01Mode) 32 else 8)
     if (only.nonEmpty) {
-      // Determinism probe: excludedSf01 is deliberately NOT honored here —
-      // probing an excluded query is exactly how its exclusion evidence
-      // was (and would again be) gathered.
       val byName = SparkEntry.queries.filter { case (n, _) => only(n) }
       (1 to repeat).foreach { pass =>
         byName.toSeq.sortBy(_._1).foreach { case (name, fn) =>

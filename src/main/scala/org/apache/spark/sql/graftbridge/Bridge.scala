@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Catalyst ⇄ public-API bridge. Spark 4 hides Column(Expression) behind
-  * `private[sql] classic.ExpressionUtils`; custom native expressions (e.g.
-  * graft.functions.JsonGetScalar) need this one hop into the sql package
-  * namespace. Standard extension-library technique — no Spark internals are
+  * `private[sql] classic.ExpressionUtils`; the engine's native functions
+  * (the kernel calls and shells in `graft.functions`) need this one hop
+  * into the sql package namespace. Standard extension-library technique — no Spark internals are
   * modified.
   */
 object Bridge {

@@ -6,6 +6,14 @@ import org.apache.spark.sql.functions._
   * the engine's native functions. */
 class EngineSpec extends GraftSparkSpec {
 
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f)
+    else Seq.empty
+
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
   test("attach registers all tables and SQL equals the DataFrame API") {
     val tables = Engine.attach(spark, "/root/testdata/sf0.001")
     assert(tables.toSet === Tables.all.toSet)
@@ -31,14 +39,7 @@ class EngineSpec extends GraftSparkSpec {
     val needle = "SparkSession" + ".builder"
     val roots = Seq("src", "perfbench/src").map(new java.io.File(_))
     assert(roots.forall(_.isDirectory), "run from the repository root")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Seq.empty
-    val builders = roots.flatMap(scalaFiles).filter { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      text.contains(needle)
-    }.map(_.getPath)
+    val builders = roots.flatMap(scalaFiles).filter(read(_).contains(needle)).map(_.getPath)
     assert(builders === Seq("src/main/scala/graft/Engine.scala"))
   }
 
@@ -47,14 +48,10 @@ class EngineSpec extends GraftSparkSpec {
     // probe main belongs in one of these, not beside them
     val root = new java.io.File("src/main")
     assert(root.isDirectory, "run from the repository root")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Seq.empty
     val obj = """(?m)^\s*(?:private(?:\[\w+\])?\s+)?object\s+(\w+)""".r
     val entry = """def\s+main\s*\(|extends\s+App\b""".r
     val mains = scalaFiles(root).flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      val text = read(f)
       // each entry point belongs to the last object declared before it
       entry.findAllMatchIn(text).map { m =>
         obj.findAllMatchIn(text.substring(0, m.end)).toSeq.lastOption
@@ -63,5 +60,19 @@ class EngineSpec extends GraftSparkSpec {
     }
     assert(mains.sorted ===
       Seq("Bench", "Coverage", "Explain", "PlanFingerprint", "ScaleUp", "Verify"))
+  }
+
+  test("every native function is a kernel call: no hand-written Catalyst expression") {
+    // eval and codegen bodies belong to StaticInvoke (GraftFunctions.kernel);
+    // a class that writes its own has an interpreted and a generated path
+    // that can disagree
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, "run from the repository root")
+    val needles = Seq("doGenCode", "nullSafeEval", "CodegenContext")
+    val hits = scalaFiles(root).flatMap { f =>
+      val text = read(f)
+      needles.filter(text.contains).map(n => s"${f.getPath}: $n")
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

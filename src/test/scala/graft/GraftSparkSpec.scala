@@ -35,14 +35,22 @@ abstract class GraftSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Runs `check` under whole-stage codegen, then again with codegen off
     * everywhere: a `StaticInvoke` kernel's interpreted path finds the
-    * kernel method by reflection instead of compiling a direct call. */
+    * kernel method by reflection instead of compiling a direct call. Both
+    * passes keep the optimizer from evaluating a projection over local
+    * test rows at planning time (`ConvertToLocalRelation`, always
+    * interpreted), so the first pass does run the generated code. */
   protected def onBothPaths(check: => Unit): Unit = {
-    check
-    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prev = off.map { case (k, _) => k -> spark.conf.getOption(k) }
-    off.foreach { case (k, v) => spark.conf.set(k, v) }
-    try check
+    val local = "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    withConf(Seq(local))(check)
+    withConf(Seq(local, "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))(check)
+  }
+
+  private def withConf(confs: Seq[(String, String)])(body: => Unit): Unit = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -61,8 +61,7 @@ class PlanFingerprintSpec extends GraftSparkSpec {
       s"${PlanFingerprint.goldenPathSf01} missing — run graft.tools.PlanFingerprint sf01")
     val golden = PlanFingerprint.parse(
       java.nio.file.Files.readString(goldenFile.toPath))
-    val expected = graft.SparkEntry.queries.keySet --
-      PlanFingerprint.excluded -- PlanFingerprint.excludedSf01
+    val expected = graft.SparkEntry.queries.keySet
     val missing = golden.keySet -- expected
     val unpinned = expected -- golden.keySet
     assert(missing.isEmpty && unpinned.isEmpty,

@@ -55,7 +55,7 @@ class PlanSpec extends GraftSparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     // "*(n)" prefixes mark WholeStageCodegen stages in the final plan
     assert(plan.contains("*(1)"), s"no codegen spans:\n$plan")
-    // the custom JsonGetScalar must not force a codegen fallback
+    // the json_get kernel call must not force a codegen fallback
     assert(!plan.contains("CodegenFallback"), s"codegen fallback present:\n$plan")
   }
 

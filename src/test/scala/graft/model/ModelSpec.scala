@@ -32,5 +32,16 @@ class ModelSpec extends GraftSparkSpec {
         |              array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c""".stripMargin)
       .head().getDouble(0)
     assert(math.abs(c - 1.0) < 1e-12)
+    // unaliased calls are named after the function, as before
+    val named = spark.sql(
+      """SELECT json_get(j, 'k'), cosine(a, b)
+        |FROM VALUES ('{"k": 42}', array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))
+        |  AS t(j, a, b)""".stripMargin)
+    assert(named.columns.toSeq === Seq("json_get(j)", "cosine(a, b)"))
+    // cosine over integer arrays still fails analysis with its own message
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT cosine(array(1, 2), array(1, 2))"))
+    assert(e.getMessage.contains(
+      "cosine requires two array<float> or two array<double>, got ARRAY<INT> / ARRAY<INT>"))
   }
 }

@@ -91,16 +91,22 @@ class DedupSpec extends GraftSparkSpec {
   }
 
   test("minhash signature is 128 longs, deterministic, null for empty shingles") {
-    val sig = Dedup.minhashSignature(Dedup.shingleSets(docs))
-    val rows = sig.orderBy("doc_id").collect()
-    val s0 = rows(0).getSeq[Long](1)
-    assert(s0.length === 128)
-    assert(rows(0).getSeq[Long](1) === rows(1).getSeq[Long](1)) // identical docs
-    assert(rows(5).isNullAt(1)) // "short doc" has no trigrams
-    // re-evaluation is stable
-    val again = Dedup.minhashSignature(Dedup.shingleSets(docs))
-      .orderBy("doc_id").collect()(0).getSeq[Long](1)
-    assert(again === s0)
+    // a StaticInvoke kernel: both evaluation paths give the same rows
+    var first: Option[Seq[Long]] = None
+    onBothPaths {
+      val sig = Dedup.minhashSignature(Dedup.shingleSets(docs))
+      val rows = sig.orderBy("doc_id").collect()
+      val s0 = rows(0).getSeq[Long](1)
+      assert(s0.length === 128)
+      assert(rows(0).getSeq[Long](1) === rows(1).getSeq[Long](1)) // identical docs
+      assert(rows(5).isNullAt(1)) // "short doc" has no trigrams
+      // re-evaluation is stable, and the same on either path
+      val again = Dedup.minhashSignature(Dedup.shingleSets(docs))
+        .orderBy("doc_id").collect()(0).getSeq[Long](1)
+      assert(again === s0)
+      assert(first.forall(_ == s0))
+      first = Some(s0)
+    }
   }
 
   test("simhash: identical docs hamming 0, near dup small, unrelated large") {

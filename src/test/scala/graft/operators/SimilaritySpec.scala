@@ -25,7 +25,6 @@ class SimilaritySpec extends GraftSparkSpec {
       Similarity.cosineSeq(col("va"), col("vb")).as("native"),
       Similarity.cosineSeqHof(col("va"), col("vb")).as("hof"))
       .filter(col("native") =!= col("hof")) // exact equality, not tolerance
-    assert(diff.count() === 0)
     // the DOUBLE-element kernel path (derived vectors, e.g. MIPS
     // augmentation) must hold the same bit-equality contract
     val dPairs = pairs.select(
@@ -35,7 +34,30 @@ class SimilaritySpec extends GraftSparkSpec {
       Similarity.cosineSeq(col("da"), col("db")).as("native"),
       Similarity.cosineSeqHof(col("da"), col("db")).as("hof"))
       .filter(col("native") =!= col("hof"))
-    assert(dDiff.count() === 0)
+    onBothPaths {
+      assert(diff.count() === 0)
+      assert(dDiff.count() === 0)
+    }
+  }
+
+  test("lshBucket packs the hyperplane sign bits of float and double vectors") {
+    val planes = Similarity.hyperplanes(8, 16)
+    // bit b set iff the sequential-fold dot product with plane b is > 0
+    val expected = vectors.collect().map { r =>
+      val v = r.getSeq[Float](1)
+      r.getLong(0) -> planes.indices.map { b =>
+        val dot = v.indices.foldLeft(0.0)((acc, i) => acc + v(i).toDouble * planes(b)(i))
+        if (dot > 0) 1L << b else 0L
+      }.sum
+    }.toMap
+    onBothPaths {
+      Seq(col("embedding"), transform(col("embedding"), x => x.cast("double")))
+        .foreach { v =>
+          val got = vectors.select(col("vec_id"), Similarity.lshBucket(v, 8, 16))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(got === expected)
+        }
+    }
   }
 
   test("cosine of identical and opposite vectors") {

@@ -97,15 +97,9 @@ Expected difference classes (all verified against the r14 goldens):
         delta = "; ".join(f"{j.replace('Exec', '')} {a}→{b}"
                           for j, (a, b) in sorted(js.items()))
         w.write(f"| {n} | {delta} |\n")
-    only_static = sorted(set(static) - set(final))
-    if only_static:
-        w.write("\n## In the static golden only (excludedSf01 — "
-                "documented non-deterministic final plans)\n\n")
-        for n in only_static:
-            w.write(f"- {n}\n")
     w.close()
     print(f"wrote PLAN_SCALE_NOTES.md ({len(shared)} shared, "
-          f"{len(flips)} join-flips, {len(only_static)} sf01-excluded)")
+          f"{len(flips)} join-flips)")
 
 
 if __name__ == "__main__":

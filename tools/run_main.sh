@@ -10,7 +10,9 @@
 # threads observed) crawl the back half of the run. Small heap = frequent
 # young GCs = the cleaner keeps up. Override with SPARK_DRIVER_MEM for
 # genuinely bigger inputs (sf1 sweeps: 16g).
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# the classes of the checkout this script sits in, wherever that was copied
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 exec java -Xmx"${SPARK_DRIVER_MEM:-8g}" -cp "$CP" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \

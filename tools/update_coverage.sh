@@ -22,7 +22,7 @@ fi
 nt=$(grep -Eo 'Total number of tests run: [0-9]+' "$testlog" | tail -1 | grep -Eo '[0-9]+')
 ns=$(grep -Eo 'Suites: completed [0-9]+' "$testlog" | tail -1 | grep -Eo '[0-9]+')
 
-line="**Totals: ${nq} registered queries — ${no} ✓oracle, ${nro} rows-only; every oracle is a DuckDB hash-compare at sf0.01 (sketch/ANN queries pin exact counterparts plus error-contract booleans, see §2.9 notes). ${nt} ScalaTest tests (${ns} suites), all green. 4 native Catalyst expressions with codegen (JsonGetScalar, CosineSimilarity, MinHashSignature, LshBucketBits) and 6 StaticInvoke-wired kernels (pq_argmin, ivf_argmax, ivf_probes, sq8_dequant, sorted_overlap, simhash_signature).**"
+line="**Totals: ${nq} registered queries — ${no} ✓oracle, ${nro} rows-only; every oracle is a DuckDB hash-compare at sf0.01 (sketch/ANN queries pin exact counterparts plus error-contract booleans, see §2.9 notes). ${nt} ScalaTest tests (${ns} suites), all green. 10 native kernels, every one a StaticInvoke built by GraftFunctions.kernel (json_get, cosine, lsh_bucket, minhash_signature, simhash_signature, pq_argmin, ivf_argmax, ivf_probes, sq8_dequant, sorted_overlap).**"
 
 python3 - "$line" "$nq" "$no" "$nt" <<'EOF'
 import re, sys
