@@ -4,6 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.queries.QueryFamily
+
 /** Driver-run benchmark: executes every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds
   * and Spark job counts.
@@ -158,9 +160,7 @@ object Bench {
     // artifact always prints from inside the JVM (see scaladoc)
     val wallBudgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(2400.0)
-    val capS = sys.env.get("SPARK_GRAFT_QUERY_CAP_S")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(150.0)
-    val runner = new Runner(spark, sfDir, capS)
+    val runner = new Runner(spark, sfDir, QueryFamily.queryCapS)
     // measurement mechanics (two passes, best-of, budget truncation) +
     // artifact-line builders live in BenchCore.Harness so the deadline
     // defenses are unit-tested with a fake clock

@@ -17,8 +17,9 @@ object Engine {
     *
     * A caller that needs more adds it around the call, not as a
     * parameter. A runtime SQL conf is set on the returned session with
-    * `spark.conf.set` (Bench's `SPARK_GRAFT_SHUFFLE` override,
-    * PlanFingerprint's pinned planner confs). A static conf is set as a `spark.*` JVM system
+    * `spark.conf.set` (Bench's `SPARK_GRAFT_SHUFFLE` override), or
+    * around one block with [[withConf]] (PlanFingerprint's pinned
+    * planner confs). A static conf is set as a `spark.*` JVM system
     * property just before the call: the builder's `SparkConf` reads those
     * (Bench's `spark.cleaner.periodicGC.interval`, the test warehouse
     * dir).
@@ -46,6 +47,24 @@ object Engine {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` with `confs` set on `spark`, then puts each key back
+    * as it was: its previous value, or unset if it was not set. Reads
+    * the set keys (`getAll`), because `getOption` returns an
+    * unset key's default, and restoring that would leave the key set.
+    * The one place that restores or unsets a session conf (`EngineSpec`
+    * checks this). */
+  private[graft] def withConf[A](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = {
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Register every parquet table under `dir` as a temp view + register

@@ -102,27 +102,22 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // ---- sf0.1 rotating oracle spot-check (round 16) ----
+    // ---- sf0.1 oracle spot-check (round 16) ----
     // Correctness otherwise runs only at sf0.01, so scale-dependent
     // wrongness (overflow, sampling-threshold boundaries, AQE-sensitive
-    // plans) would pass every round. Re-use the plan gate's 1-in-8
-    // per-round rotation: this round's slice is ALSO run at sf0.1 and
+    // plans) would pass every run. The plan gate's live slice for this
+    // source tree (PlanFingerprint.liveSlice) is ALSO run at sf0.1 and
     // dumped as `sf01_spot_<name>`, with the registered oracle rewritten
     // (table views shadowed by read_parquet CTEs over the sf0.1 dir) so
     // the driver's unchanged compare loop hash-scores it like any other
-    // row — every query gets an sf0.1 hash-compare within 8 rounds.
-    // Full runs only (a SPARK_GRAFT_ONLY iteration skips it);
-    // SPARK_GRAFT_SF01_SPOT=off disables, SPARK_GRAFT_SF01_DIR overrides.
+    // row; a source change moves the check to another 1/8 of the
+    // registry. Full runs only (a SPARK_GRAFT_ONLY iteration skips it);
+    // SPARK_GRAFT_SF01_DIR overrides the sf0.1 dir.
     val sf01Dir = sys.env.getOrElse("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1")
     val spotNames: Seq[String] =
-      if (only.nonEmpty || sys.env.get("SPARK_GRAFT_SF01_SPOT").contains("off") ||
-          !new java.io.File(s"$sf01Dir/lineitem.parquet").exists) Seq.empty
-      else {
-        val round = graft.tools.PlanFingerprint.currentRound()
-        graft.tools.PlanFingerprint
-          .rotationSlice(SparkEntry.queries.keySet, round)
-          .filter(sf01SpotEligible).toSeq.sorted
-      }
+      if (only.nonEmpty || !new java.io.File(s"$sf01Dir/lineitem.parquet").exists) Seq.empty
+      else graft.tools.PlanFingerprint.liveSlice(SparkEntry.queries.keySet)
+        .filter(sf01SpotEligible).toSeq.sorted
     val json = (SparkEntry.oracleSql.filter(kv => keep(kv._1)) ++
       spotNames.map(n => s"sf01_spot_$n" -> sf01SpotSql(SparkEntry.oracleSql(n), sf01Dir)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -173,7 +168,7 @@ object Verify {
     // timeout — the driver SIGKILLs and records `{}`. On breach: cancel all
     // Spark jobs, abandon the pool, exit 0. Finished dumps verify; the
     // stragglers surface as per-query errors instead of a zeroed round.
-    val deadlineS = sys.env.getOrElse("SPARK_GRAFT_VERIFY_DEADLINE_S", "2700").toLong
+    val deadlineS = 2700L
     val deadlineNs = System.nanoTime() + deadlineS * 1000000000L
     def awaitAll(ts: Iterable[Future[_]]): Boolean =
       ts.exists { t =>
@@ -184,7 +179,7 @@ object Verify {
     var timedOut = awaitAll(tasks)
     var attempted = tasks.size
     // PHASE 2 (strictly after phase 1 — a scratch-stateful query must
-    // never run at two SFs concurrently): the rotation slice at sf0.1,
+    // never run at two SFs concurrently): the live slice at sf0.1,
     // dumped under the sf01_spot_ prefix, inside the same global deadline.
     if (!timedOut && spotNames.nonEmpty) {
       System.err.println(s"[verify] sf01 spot slice (${spotNames.size}): " +

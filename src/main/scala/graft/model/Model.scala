@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Behavior
@@ -21,13 +21,6 @@ case class ClickEvent(event_id: Long, user_id: Long, event_type: String,
 case class TopicMessage(topic: String, value: String)
 
 object Model {
-
-  def clickEvents(df: DataFrame): Dataset[ClickEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("event_id"), col("user_id"), col("event_type"), col("props"))
-      .as[ClickEvent]
-  }
 
   /** Wide → fan-out codec (round-trip law tested in ModelSpec). */
   def fanout(events: Dataset[ClickEvent]): Dataset[TopicMessage] = {

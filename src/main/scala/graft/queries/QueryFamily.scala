@@ -75,9 +75,9 @@ object QueryFamily {
     f.delete(): Unit
   }
 
-  /** Per-query wall cap for e2e streaming queries — same knob and default
-    * as Bench's watchdog; shared by the gov_* family and the dead-letter
-    * ingest row (moved here from GovStreamQueries in round 16). */
+  /** Per-query wall cap (`SPARK_GRAFT_QUERY_CAP_S`, default 150 s): the
+    * cap of Bench's watchdog and of the e2e streaming queries (the gov_*
+    * family and the dead-letter ingest row). */
   def queryCapS: Double = sys.env.get("SPARK_GRAFT_QUERY_CAP_S")
     .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(150.0)
 
@@ -101,16 +101,10 @@ object QueryFamily {
     if (!finished) {
       // a stop that itself times out must not mask the cap error — the
       // query is getting reported capped either way
-      val key = "spark.sql.streaming.stopTimeout"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "10000")
-      val stopErr =
+      val stopErr = graft.Engine.withConf(s, Seq("spark.sql.streaming.stopTimeout" -> "10000")) {
         try { q.stop(); None }
         catch { case e: Throwable => Some(e) }
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
+      }
       val cap = new RuntimeException(
         f"$name stream exceeded the ${capS}%.0f s per-query cap")
       stopErr.foreach(cap.addSuppressed)

@@ -45,7 +45,7 @@ object ContentManifest {
     sumCols = Seq("n_docs", "total_chars"),
     aggregate = manifestOf(_, sign),
     xorCols = Seq("content_fp"),
-    // the retraction stream numbers its own micro-batches from 0 — its
+    // retraction batches are numbered from 0 on their own — their
     // exactly-once markers must not collide with the ingest stream's
     streamTag = if (sign < 0) "retract" else "batch")
 
@@ -66,11 +66,6 @@ object ContentManifest {
     * manifest on disk. Append mode — all state lives in the table. */
   def maintainManifest(rows: DataFrame, path: String): DataStreamWriter[Row] =
     upsert(path).writer(rows)
-
-  /** Streaming form of [[applyRetraction]]: a takedown feed maintains
-    * the same manifest table through its own checkpoint. */
-  def maintainRetractions(rows: DataFrame, path: String): DataStreamWriter[Row] =
-    upsert(path, sign = -1).writer(rows)
 
   /** Read the maintained manifest in the batch queries' column order. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -54,10 +54,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * table: stage computes post-merge snapshots from the table it READ, so
   * two writers interleaving stage/publish on one partition would
   * last-write-win away each other's deltas. Within one JVM every
-  * applyBatch serializes on a per-table-path lock (covering the
-  * ingest + retraction two-stream shape [[ContentManifest]] ships —
-  * Structured Streaming runs each query's foreachBatch on its own
-  * thread). ACROSS JVMs there is deliberately no coordinator — that is
+  * applyBatch serializes on a per-table-path lock (covering a table
+  * with two writers, such as [[ContentManifest]]'s ingest stream beside
+  * its `applyRetraction` takedown batches — Structured Streaming runs
+  * each query's foreachBatch on its own thread). ACROSS JVMs there is deliberately no coordinator — that is
   * the "no table format" tradeoff, documented here: concurrent writer
   * PROCESSES on one table need an external lock (or a real table
   * format); crash-recovery across processes stays safe because every
@@ -72,10 +72,10 @@ class PartitionedUpsert(
     aggregate: DataFrame => DataFrame,
     xorCols: Seq[String] = Nil,
     sketchCols: Seq[String] = Nil,
-    // Two INDEPENDENT streams maintaining one table (e.g. an ingest
-    // stream and a takedown/retraction stream, [[ContentManifest]]) each
-    // number their micro-batches from 0 — their exactly-once markers and
-    // staging dirs must not collide, so each stream tags its namespace.
+    // Two INDEPENDENT writers of one table (e.g. [[ContentManifest]]'s
+    // ingest stream and its takedown batches) each number their batches
+    // from 0 — their exactly-once markers and staging dirs must not
+    // collide, so each writer tags its namespace.
     streamTag: String = "batch") extends Serializable {
 
   // any per-key merge works if it is commutative/associative over batch
@@ -301,9 +301,9 @@ class PartitionedUpsert(
 
   /** Apply one micro-batch to the maintained table: recover any
     * interrupted predecessor, then stage → commit → publish — the whole
-    * sequence under the per-table JVM lock, so two streams maintaining
-    * one table from the same session (ingest + retraction) serialize
-    * instead of last-write-winning each other's partition snapshots. */
+    * sequence under the per-table JVM lock, so two writers of one table
+    * in the same session (ingest + takedown) serialize instead of
+    * last-write-winning each other's partition snapshots. */
   def applyBatch(batch: DataFrame, batchId: Long): Unit =
     PartitionedUpsert.tableLock(path).synchronized {
       recoverPending(batch.sparkSession)

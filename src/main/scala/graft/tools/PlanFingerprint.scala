@@ -1,10 +1,17 @@
 package graft.tools
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 import graft.{Engine, SparkEntry}
 import graft.operators.CacheScope
@@ -17,33 +24,24 @@ import graft.operators.CacheScope
   * broadcast→sort-merge regression, a dropped whole-stage-codegen span,
   * or an extra shuffle shows up as a one-line diff naming the query.
   *
-  * Determinism contract: fingerprints are computed on the PRE-EXECUTION
-  * physical plan with AQE disabled (AQE re-plans at runtime from
-  * observed sizes — fingerprinting its initial plan would double-count
-  * the adaptive wrapper and hide nothing extra) and a pinned broadcast
-  * threshold, under a fixed scale factor (sf0.001) so size-driven
-  * planner choices are reproducible. Node identity is the operator CLASS
-  * (`getClass.getSimpleName`) — stable across paths, literals, and
-  * partition counts; counts are the multiset.
+  * Each golden is one [[Mode]], a row of the plan-check table:
+  * [[static]] pins the pre-execution plan at sf0.001 and [[aqeFinal]]
+  * the AQE final plan at sf0.1. One walker ([[fingerprint]]) and one
+  * registry pass ([[fingerprintAll]]) serve both, the generator and its
+  * determinism probe included.
   */
 object PlanFingerprint {
 
-  /** Multiset of physical operator class names, sorted, as one line.
-    * `ReusedExchangeExec` is expanded into the full referenced subtree
-    * (here deterministic — planning-time dedup — but expanded anyway so
-    * the static multiset stays count-comparable with the AQE-final one,
-    * where reuse is a stage-timing race and MUST be expanded). */
-  def fingerprint(df: DataFrame): String = {
-    val counts = mutable.Map.empty[String, Int].withDefaultValue(0)
-    def walk(p: SparkPlan): Unit = p match {
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        walk(r.child)
-      case o =>
-        counts(o.getClass.getSimpleName) += 1
-        o.children.foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-    counts.toSeq.sortBy(_._1).map { case (k, n) => s"$k:$n" }.mkString(" ")
+  /** One plan-check configuration: the scale a golden is generated and
+    * checked at, the planner confs pinned around every fingerprint, the
+    * golden file, and the node classes left out of the multiset. The
+    * shuffle-partition count is also the generator's core count. */
+  final case class Mode(sfDir: String, aqe: Boolean, broadcast: String,
+      partitions: Int, golden: String, excluded: Set[String]) {
+    def confs: Seq[(String, String)] = Seq(
+      "spark.sql.adaptive.enabled" -> aqe.toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> broadcast,
+      "spark.sql.shuffle.partitions" -> partitions.toString)
   }
 
   /** Node classes EXCLUDED from the AQE-final multiset (round 16): the
@@ -75,133 +73,102 @@ object PlanFingerprint {
     "AQEShuffleReadExec", "ShuffleExchangeExec", "SortExec",
     "WindowGroupLimitExec", "InputAdapter", "WholeStageCodegenExec")
 
-  /** Multiset fingerprint of the AQE FINAL plan — the plan shape that
-    * actually ran, after runtime re-optimization from observed stage
-    * sizes (broadcast↔SMJ conversions, partition coalescing, skew
-    * splits). Materializes every non-result query stage via
-    * `AdaptiveSparkPlanExec.finalPhysicalPlan` (shuffle map stages and
-    * broadcasts execute; the result stage does not — the cheapest action
-    * that still finalizes the plan). AQE bookkeeping wrappers
-    * (`AdaptiveSparkPlanExec`, `*QueryStageExec`) are unwrapped to the
-    * operators they hold, so the multiset stays comparable to the
-    * static fingerprint; the stage-timing-racy classes
-    * ([[aqeRacyClasses]]) are excluded so the fingerprint records the
-    * plan's logical shape rather than the run's scheduling accidents. */
-  def fingerprintFinal(df: DataFrame): String = {
+  /** The planning-shape golden: the PRE-EXECUTION physical plan at
+    * sf0.001 with AQE off (AQE re-plans at runtime from observed sizes)
+    * and a pinned 64m broadcast threshold, so every planner choice is
+    * reproducible and exchange, sort and codegen counts are exact. */
+  val static: Mode = Mode("/root/testdata/sf0.001", aqe = false, broadcast = "64m",
+    partitions = 8, golden = "PLAN_FINGERPRINTS.txt", excluded = Set.empty)
+
+  /** The scale-realistic golden: the AQE FINAL plan at sf0.1 under the
+    * production-default 10 MB broadcast threshold, so fact-sized join
+    * sides genuinely exceed it and the golden records which joins flip
+    * to sort-merge when data grows — the drift the static golden (where
+    * every side broadcasts) cannot see. Fingerprinting materializes
+    * every non-result query stage; [[aqeRacyClasses]] are left out. */
+  val aqeFinal: Mode = Mode("/root/testdata/sf0.1", aqe = true, broadcast = "10m",
+    partitions = 32, golden = "PLAN_FINGERPRINTS_SF01.txt", excluded = aqeRacyClasses)
+
+  /** Multiset of physical operator class names, sorted, as one line.
+    * Node identity is the operator CLASS (`getClass.getSimpleName`) —
+    * stable across paths, literals and partition counts. Under AQE the
+    * plan is finalized first (`AdaptiveSparkPlanExec.finalPhysicalPlan`
+    * runs the shuffle map stages and broadcasts, not the result stage)
+    * and the bookkeeping wrappers (`AdaptiveSparkPlanExec`,
+    * `*QueryStageExec`) are unwrapped to the operators they hold.
+    * `ReusedExchangeExec` is expanded into the full referenced subtree:
+    * under AQE, whether two identical exchanges dedup depends on which
+    * stage materializes first, so {subtree ×1 + Reused ×1} and
+    * {subtree ×2} must give the same multiset. */
+  def fingerprint(df: DataFrame, mode: Mode): String = {
     val counts = mutable.Map.empty[String, Int].withDefaultValue(0)
     def walk(p: SparkPlan): Unit = p match {
       case a: AdaptiveSparkPlanExec => walk(a.finalPhysicalPlan)
       case q: QueryStageExec => walk(q.plan)
-      // Exchange reuse is a SCHEDULING RACE under AQE: whether two
-      // identical exchanges dedup depends on which stage materializes
-      // first, so the same query flips between {subtree ×1 + Reused ×1}
-      // and {subtree ×2} across runs. Expand the reuse node into the
-      // full referenced subtree — both outcomes then produce the same
-      // multiset, and the fingerprint records the plan's logical shape
-      // rather than the run's stage-timing accident.
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        walk(r.child)
+      case r: ReusedExchangeExec => walk(r.child)
       case o =>
-        if (!aqeRacyClasses(o.getClass.getSimpleName))
-          counts(o.getClass.getSimpleName) += 1
+        val k = o.getClass.getSimpleName
+        if (!mode.excluded(k)) counts(k) += 1
         o.children.foreach(walk)
     }
     walk(df.queryExecution.executedPlan)
     counts.toSeq.sortBy(_._1).map { case (k, n) => s"$k:$n" }.mkString(" ")
   }
 
-  /** Compute AQE-final fingerprints for the whole registry under a
-    * SCALE-REALISTIC planner configuration at sf0.1: AQE ON (the 100 TB
-    * deployment posture) and the production-default 10 MB broadcast
-    * threshold, so fact-sized join sides genuinely exceed it and the
-    * golden records which joins flip to sort-merge when data grows —
-    * exactly the drift the sf0.001 golden (where every side broadcasts)
-    * cannot see. Each query is fingerprinted inside its own
-    * `CacheScope.scoped`, so one query's cache can't turn another's scan
-    * into `InMemoryTableScan`. */
-  def fingerprintAllFinal(spark: SparkSession, sfDir: String,
-      names: Set[String] = Set.empty): Seq[(String, String)] = {
-    val pinned = Map(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "10m",
-      "spark.sql.shuffle.partitions" -> "32")
-    val prev = pinned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+  /** Fingerprints of the registered queries (all of them, or those in
+    * `names`), sorted by name, under `mode`'s pinned confs; the
+    * session's previous settings are restored afterwards. Each query is
+    * fingerprinted inside its own `CacheScope.scoped`: registry lambdas
+    * cache multi-consumer frames, and a leaked cache entry would turn a
+    * later query's identical subtree into `InMemoryTableScan`. */
+  def fingerprintAll(spark: SparkSession, mode: Mode, sfDir: String,
+      names: Set[String] = Set.empty): Seq[(String, String)] =
+    Engine.withConf(spark, mode.confs) {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => names.isEmpty || names(name) }
         .map { case (name, fn) =>
-          name -> CacheScope.scoped(fingerprintFinal(fn(spark, sfDir)))
+          name -> CacheScope.scoped(fingerprint(fn(spark, sfDir), mode))
         }
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
-  }
 
-  /** Compute all fingerprints under the pinned planner configuration
-    * (AQE off, 64m broadcast threshold, 8 shuffle partitions), restoring
-    * the session's previous settings afterwards. */
-  def fingerprintAll(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
-    val pinned = Map(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
-      "spark.sql.shuffle.partitions" -> "8")
-    val prev = pinned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .map { case (name, fn) =>
-          // per-query cache isolation, like fingerprintAllFinal (round
-          // 16): registry lambdas ambient-cache multi-consumer frames,
-          // and a leaked cache entry turns a LATER query's identical
-          // subtree into InMemoryTableScan — the golden would then
-          // depend on alphabetical execution order
-          name -> CacheScope.scoped(fingerprint(fn(spark, sfDir)))
-        }
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+  /** Deterministic 1-in-`stride` rotation slice: query q is in slice k
+    * iff (hash(q) + k) ≡ 0 (mod stride), so the `stride` slices
+    * partition the registry. String.hashCode is a specified, stable
+    * algorithm, so a slice is reproducible across JVMs. */
+  def rotationSlice(names: Set[String], k: Int, stride: Int = 8): Set[String] =
+    names.filter(n => math.floorMod(n.hashCode + k, stride) == 0)
+
+  /** The slice the live sf0.1 checks run on this source tree
+    * (`PlanFingerprintSpec`'s AQE-final re-fingerprint and Verify's
+    * spot compare): keyed on [[sourceKey]] of `src/main`, so every run
+    * on one tree checks the same slice and a source change moves the
+    * checks to another one. */
+  def liveSlice(names: Set[String], root: java.io.File = new java.io.File("src/main")): Set[String] =
+    rotationSlice(names, sourceKey(root))
+
+  /** SHA-256 over every `.scala` file under `root` (relative path and
+    * bytes, in path order), `floorMod` 8. A missing `root` hashes as an
+    * empty tree. */
+  private[graft] def sourceKey(root: java.io.File): Int = {
+    val base = root.toPath
+    val files =
+      if (!root.isDirectory) Seq.empty
+      else {
+        val walk = Files.walk(base)
+        try walk.iterator.asScala
+          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+          .map(p => base.relativize(p).toString.replace('\\', '/') -> p)
+          .toSeq.sortBy(_._1)
+        finally walk.close()
+      }
+    val md = MessageDigest.getInstance("SHA-256")
+    files.foreach { case (rel, p) =>
+      val bytes = Files.readAllBytes(p)
+      md.update(s"$rel\u0000${bytes.length}\u0000".getBytes(StandardCharsets.UTF_8))
+      md.update(bytes)
     }
+    math.floorMod(ByteBuffer.wrap(md.digest()).getInt, 8)
   }
-
-  val goldenPath = "PLAN_FINGERPRINTS.txt"
-  val goldenPathSf01 = "PLAN_FINGERPRINTS_SF01.txt"
-
-  /** Current build round. Single source: the committed `ROUND` file
-    * (one integer, bumped by the builder at the start of each round) —
-    * a value everyone who checks out the repo agrees on, unlike the
-    * r15 scheme of scanning the CWD for CORRECTNESS_r{N}.json artifacts,
-    * which computed round N+1 the moment the driver committed round N's
-    * artifact AFTER the builder's last test run, so the judge's JVM
-    * gated a rotation slice the builder never live-verified. The
-    * artifact scan survives only as a fallback for a checkout missing
-    * `ROUND`. (`PlanFingerprintSpec` additionally live-checks round+1's
-    * slice, so even a stale `ROUND` can't select an unverified slice.) */
-  def currentRound(dir: String = "."): Int = {
-    val roundFile = new java.io.File(dir, "ROUND")
-    val fromFile =
-      if (roundFile.isFile)
-        scala.util.Try(
-          java.nio.file.Files.readString(roundFile.toPath).trim.toInt).toOption
-      else None
-    fromFile.getOrElse {
-      val re = """CORRECTNESS_r0*(\d+)\.json""".r
-      val ns = Option(new java.io.File(dir).list())
-        .getOrElse(Array.empty[String])
-        .collect { case re(n) => n.toInt }
-      if (ns.isEmpty) 0 else ns.max + 1
-    }
-  }
-
-  /** Deterministic per-round 1-in-`stride` rotation slice (round 15):
-    * query q is in round r's slice iff (hash(q) + r) ≡ 0 (mod stride),
-    * so EVERY query is live re-fingerprinted exactly once per `stride`
-    * rounds while the suite only pays ~1/stride of the full ~7-min sf0.1
-    * pass per run. String.hashCode is a specified, stable algorithm, so
-    * the slice is reproducible across JVMs. */
-  def rotationSlice(names: Set[String], round: Int, stride: Int = 8): Set[String] =
-    names.filter(n => math.floorMod(n.hashCode + round, stride) == 0)
 
   def render(fps: Seq[(String, String)]): String =
     "# query<TAB>operator-class:count multiset — generated by " +
@@ -216,59 +183,38 @@ object PlanFingerprint {
 
   /** Regenerate the golden files, or probe individual queries for
     * run-determinism.
-    *   - `runMain graft.tools.PlanFingerprint [sfDir] [out]` — static
-    *     (AQE-off) fingerprints at sf0.001, the planning-shape golden.
-    *   - `runMain graft.tools.PlanFingerprint sf01 [sfDir] [out]` —
-    *     AQE-FINAL fingerprints at sf0.1 (executes non-result stages;
-    *     local[32] so the regen costs minutes, not the suite).
+    *   - `runMain graft.tools.PlanFingerprint [sfDir] [out]` — the
+    *     [[static]] golden.
+    *   - `runMain graft.tools.PlanFingerprint sf01 [sfDir] [out]` — the
+    *     [[aqeFinal]] golden (executes non-result stages; local[32] so
+    *     the regen costs minutes, not the suite).
     *   - append `only=name1,name2 repeat=N` — determinism probe: compute
-    *     the selected queries' fingerprints N times in this JVM and
-    *     print each pass to stdout (no golden write). A query whose
-    *     passes disagree is AQE-nondeterministic; the classes it
-    *     drifts on are candidates for [[aqeRacyClasses]].
+    *     the selected queries' fingerprints N times in this JVM, under
+    *     the same mode, and print each pass to stdout (no golden write).
+    *     A query whose passes disagree is AQE-nondeterministic; the
+    *     classes it drifts on are candidates for [[aqeRacyClasses]].
     */
   def main(args: Array[String]): Unit = {
-    val sf01Mode = args.headOption.contains("sf01")
-    val (kv, positional) = (if (sf01Mode) args.drop(1) else args)
+    val mode = if (args.headOption.contains("sf01")) aqeFinal else static
+    val (kv, positional) = (if (mode == aqeFinal) args.drop(1) else args)
       .partition(a => a.startsWith("only=") || a.startsWith("repeat="))
     val only = kv.collectFirst { case a if a.startsWith("only=") =>
       a.stripPrefix("only=").split(",").toSet }.getOrElse(Set.empty[String])
     val repeat = kv.collectFirst { case a if a.startsWith("repeat=") =>
       a.stripPrefix("repeat=").toInt }.getOrElse(1)
-    val sfDir = positional.headOption.getOrElse(
-      if (sf01Mode) "/root/testdata/sf0.1" else "/root/testdata/sf0.001")
-    val out = positional.lift(1).getOrElse(if (sf01Mode) goldenPathSf01 else goldenPath)
-    val spark = Engine.session(cores = if (sf01Mode) 32 else 8)
+    val sfDir = positional.headOption.getOrElse(mode.sfDir)
+    val out = positional.lift(1).getOrElse(mode.golden)
+    val spark = Engine.session(cores = mode.partitions)
     if (only.nonEmpty) {
-      val byName = SparkEntry.queries.filter { case (n, _) => only(n) }
       (1 to repeat).foreach { pass =>
-        byName.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-          // mirror the corresponding golden generator's pinned config
-          // exactly — a probe under a different planner config proves
-          // nothing about the gate (and a static probe under AQE would
-          // fingerprint just the AdaptiveSparkPlanExec wrapper)
-          val pinned =
-            if (sf01Mode) Map(
-              "spark.sql.adaptive.enabled" -> "true",
-              "spark.sql.autoBroadcastJoinThreshold" -> "10m",
-              "spark.sql.shuffle.partitions" -> "32")
-            else Map(
-              "spark.sql.adaptive.enabled" -> "false",
-              "spark.sql.autoBroadcastJoinThreshold" -> "64m",
-              "spark.sql.shuffle.partitions" -> "8")
-          pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-          val fp = CacheScope.scoped {
-            if (sf01Mode) fingerprintFinal(fn(spark, sfDir))
-            else fingerprint(fn(spark, sfDir))
-          }
+        fingerprintAll(spark, mode, sfDir, only).foreach { case (name, fp) =>
           println(s"pass=$pass\t$name\t$fp")
         }
       }
     } else {
       val t0 = System.nanoTime()
-      val fps = if (sf01Mode) fingerprintAllFinal(spark, sfDir)
-        else fingerprintAll(spark, sfDir)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), render(fps))
+      val fps = fingerprintAll(spark, mode, sfDir)
+      Files.writeString(Paths.get(out), render(fps))
       println(f"wrote $out (${fps.size} queries, ${(System.nanoTime() - t0) / 1e9}%.1f s)")
     }
     spark.stop()

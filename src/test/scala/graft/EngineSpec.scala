@@ -43,6 +43,20 @@ class EngineSpec extends GraftSparkSpec {
     assert(builders === Seq("src/main/scala/graft/Engine.scala"))
   }
 
+  test("Engine.withConf is the only code that restores or unsets a session conf") {
+    // a hand-rolled restore that reads `getOption` gets an unset key's
+    // default back and leaves the key set on the shared session; split
+    // so this file does not match itself
+    val (getOption, unset) = ("conf." + "getOption", "conf." + "unset")
+    val root = new java.io.File("src")
+    assert(root.isDirectory, "run from the repository root")
+    val hits = scalaFiles(root).flatMap { f =>
+      val text = read(f)
+      Seq(getOption, unset).filter(text.contains).map(n => s"${f.getPath}: $n")
+    }
+    assert(hits === Seq(s"src/main/scala/graft/Engine.scala: $unset"))
+  }
+
   test("the mains under src/main are exactly the kept runners and tools") {
     // one registry runner (Bench) and a fixed tool set: a new one-off
     // probe main belongs in one of these, not beside them

@@ -42,18 +42,8 @@ abstract class GraftSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected def onBothPaths(check: => Unit): Unit = {
     val local = "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
-    withConf(Seq(local))(check)
-    withConf(Seq(local, "spark.sql.codegen.wholeStage" -> "false",
+    Engine.withConf(spark, Seq(local))(check)
+    Engine.withConf(spark, Seq(local, "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))(check)
-  }
-
-  private def withConf(confs: Seq[(String, String)])(body: => Unit): Unit = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

@@ -31,6 +31,8 @@ class SchemaDriftSpec extends GraftSparkSpec {
     (2L, 5_000_000L, 2L, "click", 3.0, "{}"),
     (3L, 6_000_000L, 2L, "cart", 4.0, "{}"))
 
+  private val timestampType = "spark.sql.parquet.outputTimestampType"
+
   private def writeFixture(encoding: String): String = {
     val d = Files.createTempDirectory(s"graft-drift-$encoding-").toString
     val base = spark.createDataFrame(rowsUs)
@@ -44,12 +46,10 @@ class SchemaDriftSpec extends GraftSparkSpec {
         base.withColumn("ts",
           timestamp_micros(col("ts_us")).cast(org.apache.spark.sql.types.TimestampNTZType))
     }
-    val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    try {
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    Engine.withConf(spark, Seq(timestampType -> "TIMESTAMP_MICROS")) {
       df.select("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
-    } finally prev.foreach(spark.conf.set("spark.sql.parquet.outputTimestampType", _))
+    }
     d
   }
 
@@ -78,6 +78,13 @@ class SchemaDriftSpec extends GraftSparkSpec {
     assert(times.distinct.size === 1, s"eventTime diverged: $times")
     // and the wall-clock is the UTC µs instant, not a tz-shifted one
     assert(times.head.contains((0L, "1970-01-01 00:00:01")))
+  }
+
+  test("the fixture write leaves the parquet timestamp type unset on the shared session") {
+    // `getOption` would read the default back; `getAll` holds only set keys
+    writeFixture("ts_micros")
+    val left = spark.conf.getAll.get(timestampType)
+    assert(left.isEmpty, s"$timestampType is left set for every later suite")
   }
 
   test("a registry tus query (ref_sessions) is identical on all encodings") {

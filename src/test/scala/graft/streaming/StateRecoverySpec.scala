@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.GraftSparkSpec
+import graft.{Engine, GraftSparkSpec}
 
 /** Driver-side collector for restart tests: the memory sink refuses
   * checkpoint recovery (not fault-tolerant), foreachBatch supports it —
@@ -87,15 +87,10 @@ class StateRecoverySpec extends GraftSparkSpec {
   }
 
   test("flatMapGroupsWithState state survives kill + restart (RocksDB provider)") {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try assert(killRestartScenario("rocksdb") === ((3L, 2L, 1000L, 5000L)))
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+    val rocks = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    Engine.withConf(spark, Seq(rocks)) {
+      assert(killRestartScenario("rocksdb") === ((3L, 2L, 1000L, 5000L)))
     }
   }
 }

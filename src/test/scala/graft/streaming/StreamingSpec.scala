@@ -4,7 +4,7 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.GraftSparkSpec
+import graft.{Engine, GraftSparkSpec}
 import graft.operators.Behavior
 
 /** Streaming semantics (SURVEY §2.8): the Complete-mode snapshot must equal
@@ -303,27 +303,24 @@ class StreamingSpec extends GraftSparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(String, String)]
-    val q = Behavior.valueCounts(input.toDF().toDF("topic", "value"))
-      .writeStream.queryName("rocks_test").outputMode("complete")
-      .format("memory").start()
-    try {
-      input.addData(("click_k", "7"), ("click_k", "7"), ("view_k", "9"))
-      q.processAllAvailable()
-      input.addData(("click_k", "7"))
-      q.processAllAvailable()
-      val counts = s.sql("SELECT * FROM rocks_test").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(counts(("click_k", "7")) === 3)
-      // the query really ran on RocksDB, not the default provider
-      assert(q.lastProgress.json.contains("rocksdb"), q.lastProgress.json.take(500))
-    } finally {
-      q.stop()
-      prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    val rocks = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    Engine.withConf(s, Seq(rocks)) {
+      val input = MemoryStream[(String, String)]
+      val q = Behavior.valueCounts(input.toDF().toDF("topic", "value"))
+        .writeStream.queryName("rocks_test").outputMode("complete")
+        .format("memory").start()
+      try {
+        input.addData(("click_k", "7"), ("click_k", "7"), ("view_k", "9"))
+        q.processAllAvailable()
+        input.addData(("click_k", "7"))
+        q.processAllAvailable()
+        val counts = s.sql("SELECT * FROM rocks_test").collect()
+          .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+        assert(counts(("click_k", "7")) === 3)
+        // the query really ran on RocksDB, not the default provider
+        assert(q.lastProgress.json.contains("rocksdb"), q.lastProgress.json.take(500))
+      } finally q.stop()
     }
   }
 

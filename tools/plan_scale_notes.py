@@ -83,7 +83,7 @@ Expected difference classes (all verified against the r14 goldens):
    were measured flapping ±1-2 across byte-identical same-config runs
    (coalesced-read placement and rank-limit re-planning race on stage
    completion order; codegen packaging follows), so
-   `PlanFingerprint.fingerprintFinal` excludes them from the multiset.
+   `PlanFingerprint.aqeFinal` excludes them from the multiset.
    Exchange/sort/codegen counts remain exactly pinned by the STATIC
    sf0.001 golden, which is fully deterministic with AQE off.
 
