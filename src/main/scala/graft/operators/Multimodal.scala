@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One decoded media record (opaque bytes + typed metadata). */
@@ -153,6 +155,22 @@ object Multimodal {
   private def useMemoryCache(): Unit =
     if (javax.imageio.ImageIO.getUseCache) javax.imageio.ImageIO.setUseCache(false)
 
+  /** The decode prologue of every raster operator: one `mapPartitions`
+    * pass that decodes each payload with `ImageIO.read` and hands
+    * (doc_id, image) to `f`, whose rows it emits. Undecodable payloads
+    * fail loudly rather than emitting garbage rows. */
+  private def decodeEach[T <: Product : TypeTag](images: Dataset[ImageRow])(
+      f: (Long, java.awt.image.BufferedImage) => IterableOnce[T]): Dataset[T] =
+    images.mapPartitions { rows =>
+      useMemoryCache()
+      rows.flatMap { r =>
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(r.png))
+        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
+        f(r.doc_id, img)
+      }
+    }(Encoders.product[T])
+
   /** Deterministic synthetic media table derived from `documents`: the
     * text's UTF-8 bytes play the payload, mime rotates by doc_id. Stands in
     * for `spark.read.format("binaryFile")` at the same schema. */
@@ -262,33 +280,25 @@ object Multimodal {
     * ByteArrayInputStream. Undecodable payloads fail loudly
     * (IIOException) rather than emitting garbage rows. */
   def decodeImageStats(images: Dataset[ImageRow]): Dataset[ImageStats] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val (w, h) = (img.getWidth, img.getHeight)
-        val raster = img.getRaster
-        val seen = new Array[Boolean](256)
-        var sum = 0L
-        var nDistinct = 0
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = raster.getSample(x, y, 0)
-            sum += v
-            if (!seen(v)) { seen(v) = true; nDistinct += 1 }
-            x += 1
-          }
-          y += 1
+    decodeEach(images) { (docId, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      val raster = img.getRaster
+      val seen = new Array[Boolean](256)
+      var sum = 0L
+      var nDistinct = 0
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val v = raster.getSample(x, y, 0)
+          sum += v
+          if (!seen(v)) { seen(v) = true; nDistinct += 1 }
+          x += 1
         }
-        ImageStats(r.doc_id, w, h, w * h, sum, nDistinct,
-          sum.toDouble / (w * h))
+        y += 1
       }
+      Iterator.single(ImageStats(docId, w, h, w * h, sum, nDistinct,
+        sum.toDouble / (w * h)))
     }
   }
 
@@ -304,40 +314,32 @@ object Multimodal {
     * the histogram came off a real PNG decode. Embarrassingly parallel
     * mapPartitions, no shuffle. */
   def decodeHistogram(images: Dataset[ImageRow]): Dataset[HistStats] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val (w, h) = (img.getWidth, img.getHeight)
-        val raster = img.getRaster
-        val bins = new Array[Long](16)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            bins(raster.getSample(x, y, 0) >> 4) += 1
-            x += 1
-          }
-          y += 1
+    decodeEach(images) { (docId, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      val raster = img.getRaster
+      val bins = new Array[Long](16)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          bins(raster.getSample(x, y, 0) >> 4) += 1
+          x += 1
         }
-        val n = w * h
-        var hit = 0
-        var mode = 0
-        var chi2 = 0L
-        var b = 0
-        while (b < 16) {
-          if (bins(b) > 0) hit += 1
-          if (bins(b) > bins(mode)) mode = b
-          val d = 16L * bins(b) - n
-          chi2 += d * d
-          b += 1
-        }
-        HistStats(r.doc_id, n, hit, mode, chi2)
+        y += 1
       }
+      val n = w * h
+      var hit = 0
+      var mode = 0
+      var chi2 = 0L
+      var b = 0
+      while (b < 16) {
+        if (bins(b) > 0) hit += 1
+        if (bins(b) > bins(mode)) mode = b
+        val d = 16L * bins(b) - n
+        chi2 += d * d
+        b += 1
+      }
+      Iterator.single(HistStats(docId, n, hit, mode, chi2))
     }
   }
 
@@ -355,33 +357,25 @@ object Multimodal {
     * Scale: one decode pass per image inside `mapPartitions`, no shuffle
     * until the output aggregate — embarrassingly parallel. */
   def resizeGrid(images: Dataset[ImageRow], grid: Int = 4): Dataset[ResizeCell] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.flatMap { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val (w, h) = (img.getWidth, img.getHeight)
-        val raster = img.getRaster
-        val sums = new Array[Long](grid * grid)
-        val cnts = new Array[Long](grid * grid)
-        var y = 0
-        while (y < h) {
-          val ty = grid * y / h
-          var x = 0
-          while (x < w) {
-            val c = ty * grid + grid * x / w
-            sums(c) += raster.getSample(x, y, 0)
-            cnts(c) += 1L
-            x += 1
-          }
-          y += 1
+    decodeEach(images) { (docId, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      val raster = img.getRaster
+      val sums = new Array[Long](grid * grid)
+      val cnts = new Array[Long](grid * grid)
+      var y = 0
+      while (y < h) {
+        val ty = grid * y / h
+        var x = 0
+        while (x < w) {
+          val c = ty * grid + grid * x / w
+          sums(c) += raster.getSample(x, y, 0)
+          cnts(c) += 1L
+          x += 1
         }
-        (0 until grid * grid).iterator.filter(cnts(_) > 0).map { c =>
-          ResizeCell(r.doc_id, c, cnts(c), 1000000L * sums(c) / cnts(c))
-        }
+        y += 1
+      }
+      (0 until grid * grid).iterator.filter(cnts(_) > 0).map { c =>
+        ResizeCell(docId, c, cnts(c), 1000000L * sums(c) / cnts(c))
       }
     }
   }
@@ -767,31 +761,23 @@ object Multimodal {
     * Scale: narrow embarrassingly-parallel decode, one long per image
     * out; the payload bytes never shuffle. */
   def dHashes(images: Dataset[ImageRow]): Dataset[PhashRow] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val (w, h) = (img.getWidth, img.getHeight)
-        val raster = img.getRaster
-        var hash = 0L
-        var gy = 0
-        while (gy < 8) {
-          val y = gy * h / 8
-          var gx = 0
-          while (gx < 7) {
-            val v0 = raster.getSample(gx * w / 8, y, 0)
-            val v1 = raster.getSample((gx + 1) * w / 8, y, 0)
-            if (v1 > v0) hash |= 1L << (gy * 7 + gx)
-            gx += 1
-          }
-          gy += 1
+    decodeEach(images) { (docId, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      val raster = img.getRaster
+      var hash = 0L
+      var gy = 0
+      while (gy < 8) {
+        val y = gy * h / 8
+        var gx = 0
+        while (gx < 7) {
+          val v0 = raster.getSample(gx * w / 8, y, 0)
+          val v1 = raster.getSample((gx + 1) * w / 8, y, 0)
+          if (v1 > v0) hash |= 1L << (gy * 7 + gx)
+          gx += 1
         }
-        PhashRow(r.doc_id, hash)
+        gy += 1
       }
+      Iterator.single(PhashRow(docId, hash))
     }
   }
 
@@ -1089,20 +1075,12 @@ object Multimodal {
     * came through TWO lossless codec roundtrips, so its single-tile
     * signature must equal the source image's tile-0 signature. */
   def cropTopLeft(images: Dataset[ImageRow]): Dataset[ImageRow] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val crop = img.getSubimage(0, 0,
-          math.max(1, img.getWidth / 2), math.max(1, img.getHeight / 2))
-        val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(crop, "png", out)
-        ImageRow(r.doc_id, out.toByteArray)
-      }
+    decodeEach(images) { (docId, img) =>
+      val crop = img.getSubimage(0, 0,
+        math.max(1, img.getWidth / 2), math.max(1, img.getHeight / 2))
+      val out = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(crop, "png", out)
+      Iterator.single(ImageRow(docId, out.toByteArray))
     }
   }
 
@@ -1134,28 +1112,20 @@ object Multimodal {
   }
 
   def tileSignatures(images: Dataset[ImageRow]): Dataset[TileSig] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.flatMap { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val (w, h) = (img.getWidth, img.getHeight)
-        val (w2, h2) = (math.max(1, w / 2), math.max(1, h / 2))
-        val raster = img.getRaster
-        for {
-          rb <- 0 to 1
-          cb <- 0 to 1
-          y0 = if (rb == 0) 0 else h2
-          y1 = if (rb == 0) h2 else h
-          x0 = if (cb == 0) 0 else w2
-          x1 = if (cb == 0) w2 else w
-          if y1 > y0 && x1 > x0
-        } yield TileSig(r.doc_id, 2 * rb + cb, x1 - x0, y1 - y0,
-          boxSig(raster, x0, x1, y0, y1))
-      }
+    decodeEach(images) { (docId, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      val (w2, h2) = (math.max(1, w / 2), math.max(1, h / 2))
+      val raster = img.getRaster
+      for {
+        rb <- 0 to 1
+        cb <- 0 to 1
+        y0 = if (rb == 0) 0 else h2
+        y1 = if (rb == 0) h2 else h
+        x0 = if (cb == 0) 0 else w2
+        x1 = if (cb == 0) w2 else w
+        if y1 > y0 && x1 > x0
+      } yield TileSig(docId, 2 * rb + cb, x1 - x0, y1 - y0,
+        boxSig(raster, x0, x1, y0, y1))
     }
   }
 
@@ -1165,17 +1135,9 @@ object Multimodal {
     * into quadrants would probe with quarter-crops instead — the exact
     * bug the unit test's 1×1 crop couldn't see). Reported as tile −1. */
   def wholeSignature(images: Dataset[ImageRow]): Dataset[TileSig] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.mapPartitions { rows =>
-      useMemoryCache()
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.png))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        TileSig(r.doc_id, -1, img.getWidth, img.getHeight,
-          boxSig(img.getRaster, 0, img.getWidth, 0, img.getHeight))
-      }
+    decodeEach(images) { (docId, img) =>
+      Iterator.single(TileSig(docId, -1, img.getWidth, img.getHeight,
+        boxSig(img.getRaster, 0, img.getWidth, 0, img.getHeight)))
     }
   }
 }

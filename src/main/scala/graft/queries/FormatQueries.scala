@@ -27,13 +27,10 @@ object FormatQueries extends QueryFamily {
   import QueryFamily._
 
   /** The dead-letter row replays its whole multi-batch stream from
-    * batch 0 against cleared scratch on every execution (gov_* family
-    * convention) — a bench warmup is a wasted identical replay. */
+    * batch 0 against cleared state on every execution
+    * ([[QueryFamily.replayStream]]) — a bench warmup is a wasted
+    * identical replay. */
   override def noWarmup: Set[String] = Set("fmt_deadletter_stream")
-
-  /** Data dir whose fmt_deadletter_stream source parquet is already
-    * written in this JVM (single-element: a cross-SF switch rewrites). */
-  private val dlsSrc = scala.collection.mutable.Set.empty[String]
 
   /** orders with exact-typed money/date columns (shared by csv/partition). */
   private def ordersExact(s: SparkSession, d: String): DataFrame =
@@ -117,10 +114,10 @@ object FormatQueries extends QueryFamily {
     }),
 
     // Dead-letter STREAMING ingest e2e (the fmt_json_quarantine corruption
-    // + the gov_* multi-batch file-stream harness): the same
-    // deterministically truncated JSON lines land as a 3-file source,
-    // streamed one file per micro-batch (Trigger.AvailableNow) through
-    // DeadLetter.jsonDirStream → route — quarantined raw lines to
+    // + the gov_* multi-batch file-stream harness, QueryFamily.replayStream):
+    // the same deterministically truncated JSON lines land as a 3-file
+    // source, streamed one file per micro-batch (an AvailableNow trigger)
+    // through DeadLetter.jsonDirStream → route — quarantined raw lines to
     // deadLetterDir/batch=<id>, clean rows to a per-batch parquet sink,
     // both idempotent-overwrite per batch id so checkpoint-recovery
     // replays rewrite instead of duplicating. The oracle computes the
@@ -130,49 +127,26 @@ object FormatQueries extends QueryFamily {
     // double-count. The batch twin is fmt_json_quarantine; this row makes
     // the streaming path driver-visible (it was spec-only through r15).
     "fmt_deadletter_stream" -> ((s, d) => {
-      val root = jvmScratch("fmt_dls")
-      val src = s"$root/src"
-      val dead = s"$root/dead"
-      val cleanDir = s"$root/clean"
-      // source files are IMMUTABLE inputs (gov_* convention): written
-      // once per (JVM, data dir) and reused by bench re-runs, which
-      // clear only the maintained state + checkpoint so the stream
-      // replays from batch 0 (bench classes this noWarmup)
-      val srcReused = dlsSrc.synchronized {
-        val ok = dlsSrc.contains(d) && new java.io.File(src).isDirectory
-        if (!ok) {
-          clearScratch(root)
-          Tables.documents(s, d)
-            // source LAST so truncating the closing `"}` always breaks
-            // the quoting (same rule as fmt_json_quarantine)
-            .withColumn("js",
-              to_json(struct(col("doc_id"), col("n_chars"), col("source"))))
-            .select(when(col("doc_id") % 7 === 0,
-                expr("substring(js, 1, length(js) - 2)")
-              ).otherwise(col("js")).as("value"))
-            .repartition(3).write.text(src)
-          dlsSrc.clear()
-          dlsSrc += d
-        }
-        ok
-      }
-      if (srcReused)
-        Seq(dead, cleanDir, s"$root/cp").foreach(clearScratch)
+      val lines = Tables.documents(s, d)
+        // source LAST so truncating the closing `"}` always breaks
+        // the quoting (same rule as fmt_json_quarantine)
+        .withColumn("js",
+          to_json(struct(col("doc_id"), col("n_chars"), col("source"))))
+        .select(when(col("doc_id") % 7 === 0,
+            expr("substring(js, 1, length(js) - 2)")
+          ).otherwise(col("js")).as("value"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id BIGINT, n_chars BIGINT, source STRING")
-      val q = DeadLetter.jsonDirStream(s, src, schema, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          DeadLetter.route(batch, id, dead) { clean =>
-            clean.write.mode("overwrite").parquet(s"$cleanDir/batch=$id")
+      val state = replayStream(s, "fmt_deadletter_stream", d, lines,
+          json = Some(schema)) { (stream, dir) =>
+        stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+          DeadLetter.route(batch, id, s"$dir/dead") { clean =>
+            clean.write.mode("overwrite").parquet(s"$dir/clean/batch=$id")
           }
         }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryFamily.awaitBounded(s, "fmt_deadletter_stream", q, QueryFamily.queryCapS)
-      val clean = s.read.parquet(cleanDir).drop("batch")
-      val quarantined = s.read.parquet(dead).drop("batch")
+      }
+      val clean = s.read.parquet(s"$state/clean").drop("batch")
+      val quarantined = s.read.parquet(s"$state/dead").drop("batch")
       clean.groupBy(col("source"))
         .agg(count(lit(1)).as("n_clean"),
           sum(col("doc_id")).as("clean_id_sum"),

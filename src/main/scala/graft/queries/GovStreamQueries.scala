@@ -2,20 +2,20 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.Tables
 import graft.streaming.{CardinalityScreen, ContentManifest, PrivacyScreen}
 
 /** END-TO-END oracle coverage for the streaming governance screens
   * ([[graft.streaming.PrivacyScreen]], [[graft.streaming.ContentManifest]],
-  * [[graft.streaming.CardinalityScreen]]): each query drives the source
-  * table through a REAL multi-batch file stream (`maxFilesPerTrigger=1`
-  * over a ≥3-file source, `Trigger.AvailableNow`) into the screen's
-  * `foreachBatch` [[graft.streaming.PartitionedUpsert]], then returns the
-  * maintained on-disk table. The DuckDB oracle is the BATCH gate over the
+  * [[graft.streaming.CardinalityScreen]]): each query is one
+  * [[QueryFamily.replayStream]] call, which drives the source table
+  * through a REAL multi-batch file stream (one file per trigger over a
+  * ≥3-file source, an AvailableNow trigger) into the screen's
+  * `foreachBatch` [[graft.streaming.PartitionedUpsert]]; the query then
+  * returns the maintained on-disk table. The DuckDB oracle is the BATCH gate over the
   * same rows, so every green row is the online==batch law proven under
   * the driver's own harness — the `rel_incremental_agg` pattern, with the
   * micro-batching done by Structured Streaming instead of hand-split
@@ -35,114 +35,33 @@ import graft.streaming.{CardinalityScreen, ContentManifest, PrivacyScreen}
 object GovStreamQueries extends QueryFamily {
 
   /** Every query here replays its multi-batch stream from batch 0 against
-    * cleared scratch on each execution — a bench warmup is a third
+    * cleared state on each execution — a bench warmup is a third
     * identical full replay that warms nothing (r14: ~14.5 s of floor and
     * the likeliest per-query-cap victims on a contended host). */
   override def noWarmup: Set[String] = queries.keySet
 
-  /** Source parquet written per (query, data dir) this JVM: the source
-    * files are IMMUTABLE inputs (in production they already exist — the
-    * stream's job is to fold them in), so bench best-of re-runs reuse
-    * them and clear only the maintained state + checkpoint to force the
-    * replay from batch 0. Keyed by the data dir so a JVM that runs the
-    * same query at two SFs (scaling sweeps) rewrites correctly. */
-  private val srcWritten = scala.collection.mutable.Map.empty[String, String]
-
-  /** Write `rows` as a ≥3-file parquet dir at `dir` once per (JVM, data
-    * dir); on reuse, nothing is touched. Returns true when the dir was
-    * freshly written (the caller's whole scratch root is cleared first —
-    * fresh source invalidates any maintained state beside it). */
-  private def ensureSrcOnce(root: String, dir: String, name: String,
-      srcKey: String, rows: => DataFrame): Boolean = synchronized {
-    val reuse = srcWritten.get(name).contains(srcKey) &&
-      new java.io.File(dir).isDirectory
-    if (!reuse) {
-      QueryFamily.clearScratch(root)
-      rows.repartition(3).write.parquet(dir)
-      srcWritten(name) = srcKey
-    }
-    !reuse
+  /** Both privacy rows: per-QI-class sizes maintained by the stream, read
+    * back in the batch gate's (rel_k_anonymity) columns with k applied. */
+  private def privacyScreen(s: SparkSession, d: String, name: String,
+      restart: Boolean): DataFrame = {
+    val rows = Tables.customer(s, d).select(col("c_nationkey"), col("c_mktsegment"))
+    val state = QueryFamily.replayStream(s, name, d, rows, restart = restart)(
+      PrivacyScreen.maintainClassSizes(_, _, part = "c_nationkey", key = "c_mktsegment"))
+    PrivacyScreen.audit(s, state, k = 10)
+      .select(col("c_nationkey").cast("long").as("c_nationkey"),
+        col("c_mktsegment"), col("class_size"), col("violates_k"),
+        col("reident_ppm"))
+      .orderBy(col("c_nationkey"), col("c_mktsegment"))
   }
 
-  /** Write `rows` as a ≥3-file parquet dir (once per JVM per data dir),
-    * stream it back one file per micro-batch through `writer`, await
-    * completion, return the maintained-state path. State + checkpoint
-    * are cleared first so a re-run inside one JVM (bench best-of passes)
-    * replays the stream from batch 0 against empty state instead of
-    * double-folding. */
-  private def runFileStream(s: SparkSession, name: String, srcKey: String,
-      rows: => DataFrame,
-      writer: (DataFrame, String) => DataStreamWriter[Row]): String = {
-    val root = QueryFamily.jvmScratch(s"graft_$name")
-    val src = s"$root/src"
-    val state = s"$root/state"
-    if (!ensureSrcOnce(root, src, name, srcKey, rows)) {
-      QueryFamily.clearScratch(state)
-      QueryFamily.clearScratch(s"$root/cp")
-    }
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = writer(stream, state)
-      .option("checkpointLocation", s"$root/cp")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitBounded(s, name, q, queryCapS)
-    state
-  }
-
-  /** Bounded stream await + per-query cap, shared with the dead-letter
-    * ingest row since round 16 — see [[QueryFamily.awaitBounded]]. */
-  private def queryCapS: Double = QueryFamily.queryCapS
-
-  private def awaitBounded(s: SparkSession, name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      capS: Double): Unit = QueryFamily.awaitBounded(s, name, q, capS)
-
-  /** The RESTART variant: the source's first file is revealed alone, one
-    * stream lifetime drains it and TERMINATES; the remaining files land
-    * and a SECOND `start()` from the SAME checkpoint resumes — the
-    * kill+restart recovery law as a driver-visible oracled row. The file
-    * source's checkpoint log must carry the seen-files set across
-    * lifetimes (refolding file 0 would double-count every class and
-    * hash-mismatch the batch-gate oracle), and the upsert's exactly-once
-    * markers must hold across the restart boundary. */
-  private def runRestartedFileStream(s: SparkSession, name: String,
-      srcKey: String, rows: => DataFrame,
-      writer: (DataFrame, String) => DataStreamWriter[Row]): String = {
-    val root = QueryFamily.jvmScratch(s"graft_$name")
-    val all = s"$root/all"
-    ensureSrcOnce(root, all, name, srcKey, rows): Unit
-    val src = s"$root/src"
-    val state = s"$root/state"
-    Seq(src, state, s"$root/cp").foreach(QueryFamily.clearScratch)
-    val files = new java.io.File(all).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-    new java.io.File(src).mkdirs()
-    def reveal(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(src, f.getName).toPath): Unit
-    }
-    val schema = s.read.parquet(all).schema
-    // ONE per-query cap across BOTH lifetimes: each awaitBounded gets the
-    // budget REMAINING, not a fresh full cap — two lifetimes must not
-    // quietly double the per-query wall bound the cap exists to enforce
-    val deadline = System.nanoTime() + (queryCapS * 1e9).toLong
-    def lifetime(): Unit = {
-      val q = writer(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src), state)
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitBounded(s, name, q, (deadline - System.nanoTime()) / 1e9)
-    }
-    reveal(files.take(1))
-    lifetime() // folds batch 0, then terminates (AvailableNow drained)
-    reveal(files.drop(1))
-    lifetime() // resumes from the checkpoint: batches 1..n, never batch 0
-    state
-  }
+  /** The batch k-anonymity gate over the full table: the oracle of both
+    * privacy rows, since equality across the restart IS the law checked. */
+  private val privacyOracle =
+    """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, c_mktsegment,
+      |  COUNT(*) AS class_size,
+      |  CAST(COUNT(*) < 10 AS INT) AS violates_k,
+      |  CAST(1000000 // COUNT(*) AS BIGINT) AS reident_ppm
+      |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   private def eventRows(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).select(
@@ -154,18 +73,8 @@ object GovStreamQueries extends QueryFamily {
     // batches must equal the batch release gate (rel_k_anonymity) over
     // the full table — same class_size / violates_k / reident_ppm
     // columns, k applied on read.
-    "gov_privacy_screen" -> ((s, d) => {
-      val rows = Tables.customer(s, d)
-        .select(col("c_nationkey"), col("c_mktsegment"))
-      val state = runFileStream(s, "gov_privacy", d, rows,
-        (st, p) => PrivacyScreen.maintainClassSizes(st, p,
-          part = "c_nationkey", key = "c_mktsegment"))
-      PrivacyScreen.audit(s, state, k = 10)
-        .select(col("c_nationkey").cast("long").as("c_nationkey"),
-          col("c_mktsegment"), col("class_size"), col("violates_k"),
-          col("reident_ppm"))
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))
-    }),
+    "gov_privacy_screen" -> ((s, d) =>
+      privacyScreen(s, d, "gov_privacy_screen", restart = false)),
 
     // the same privacy screen KILLED and RESTARTED mid-stream: lifetime 1
     // folds only the first source file and terminates; lifetime 2 is a
@@ -175,18 +84,8 @@ object GovStreamQueries extends QueryFamily {
     // batch hash-mismatches). The harsher crash windows (between the
     // upsert's commit and publish) are pinned in UpsertCrashSpec; this
     // row makes the recovery law driver-visible.
-    "gov_privacy_restart" -> ((s, d) => {
-      val rows = Tables.customer(s, d)
-        .select(col("c_nationkey"), col("c_mktsegment"))
-      val state = runRestartedFileStream(s, "gov_privacy_restart", d, rows,
-        (st, p) => PrivacyScreen.maintainClassSizes(st, p,
-          part = "c_nationkey", key = "c_mktsegment"))
-      PrivacyScreen.audit(s, state, k = 10)
-        .select(col("c_nationkey").cast("long").as("c_nationkey"),
-          col("c_mktsegment"), col("class_size"), col("violates_k"),
-          col("reident_ppm"))
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))
-    }),
+    "gov_privacy_restart" -> ((s, d) =>
+      privacyScreen(s, d, "gov_privacy_restart", restart = true)),
 
     // online dataset manifest: per-source (n_docs, total_chars, XOR
     // content fingerprint) folded batch-by-batch must equal the batch
@@ -194,8 +93,8 @@ object GovStreamQueries extends QueryFamily {
     "gov_manifest_screen" -> ((s, d) => {
       val rows = Tables.documents(s, d)
         .select(col("source"), col("doc_id"), col("text"), col("n_chars"))
-      val state = runFileStream(s, "gov_manifest", d, rows,
-        (st, p) => ContentManifest.maintainManifest(st, p))
+      val state = QueryFamily.replayStream(s, "gov_manifest_screen", d, rows)(
+        ContentManifest.maintainManifest)
       ContentManifest.read(s, state).orderBy(col("source"))
     }),
 
@@ -206,8 +105,8 @@ object GovStreamQueries extends QueryFamily {
     // (the rel_approx_users convention).
     "gov_cardinality_screen" -> ((s, d) => {
       val rows = eventRows(s, d)
-      val state = runFileStream(s, "gov_cardinality", d, rows,
-        (st, p) => CardinalityScreen.maintainDistincts(st, p))
+      val state = QueryFamily.replayStream(s, "gov_cardinality_screen", d, rows)(
+        CardinalityScreen.maintainDistincts)
       val exact = rows.groupBy(col("day"), col("event_type"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
       CardinalityScreen.estimates(s, state)
@@ -221,21 +120,8 @@ object GovStreamQueries extends QueryFamily {
   )
 
   val oracles: ListMap[String, String] = ListMap(
-    // the batch k-anonymity gate over the full table
-    "gov_privacy_screen" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, c_mktsegment,
-        |  COUNT(*) AS class_size,
-        |  CAST(COUNT(*) < 10 AS INT) AS violates_k,
-        |  CAST(1000000 // COUNT(*) AS BIGINT) AS reident_ppm
-        |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // restart variant: identical batch gate — equality across the
-    // restart IS the law being checked
-    "gov_privacy_restart" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, c_mktsegment,
-        |  COUNT(*) AS class_size,
-        |  CAST(COUNT(*) < 10 AS INT) AS violates_k,
-        |  CAST(1000000 // COUNT(*) AS BIGINT) AS reident_ppm
-        |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "gov_privacy_screen" -> privacyOracle,
+    "gov_privacy_restart" -> privacyOracle,
     // the batch fingerprint (identical hash to rel_dataset_fingerprint)
     "gov_manifest_screen" ->
       s"""SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Behavior
 
@@ -11,8 +11,8 @@ import graft.operators.Behavior
   * The reference's runtime loop (`Raport.py:216-227` + `app.py:33-47`) is a
   * 60 s cadence that re-reads the ENTIRE Kafka log from earliest each tick
   * and recomputes all aggregates — a cumulative, all-history snapshot
-  * (T2). Incremental equivalent here: the same logical aggregation run as
-  * a streaming query with `OutputMode.Complete` and
+  * (T2). Incremental equivalent ([[ReportSink.writer]]): the same logical
+  * aggregation run as a streaming query with `OutputMode.Complete` and
   * `Trigger.ProcessingTime(60s)` — Spark's state store carries the running
   * aggregate, so each tick costs O(new data), not O(history), and the
   * 10-s-poll truncation hazard (T5, `Raport.py:48-51`) cannot occur:
@@ -61,21 +61,7 @@ object BehaviorStream {
       .option("kafka.bootstrap.servers", brokers)
       .option("checkpointLocation", checkpoint)
 
-  /** T1/T2 — the reference's report loop: cumulative value-counts snapshot
-    * refreshed every `cadence`. Complete mode = full snapshot per tick,
-    * exactly the semantics of re-reading from earliest. State is bounded by
-    * (topic × value-domain) cardinality — fine at reference shape; for
-    * unbounded domains use [[windowedValueCounts]] (documented deviation). */
-  def cumulativeValueCounts(msgs: DataFrame, queryName: String,
-      cadence: String = "60 seconds"): DataStreamWriter[org.apache.spark.sql.Row] =
-    Behavior.valueCounts(msgs)
-      .writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .trigger(Trigger.ProcessingTime(cadence))
-
-  /** T2 at scale — the SURVEY §7.5 mitigation for [[cumulativeValueCounts]]'
+  /** T2 at scale — the SURVEY §7.5 mitigation for [[ReportSink.writer]]'s
     * unbounded Complete-mode state: the SAME cumulative A1 aggregate
     * (`Raport.py:76-88`), maintained as an Update-style upsert into a
     * `partitionBy(topic)` parquet table via the [[PartitionedUpsert]]
@@ -91,7 +77,9 @@ object BehaviorStream {
       path, partCol = "topic", keyCols = Seq("value"),
       sumCols = Seq("cnt"), aggregate = Behavior.valueCounts).writer(msgs)
 
-  /** T2/T3 extension — watermarked tumbling-window value counts. The
+  /** T2/T3 extension — watermarked tumbling-window value counts, the
+    * bounded-state alternative to [[ReportSink.writer]]'s Complete-mode
+    * counts for unbounded value domains (documented deviation). The
     * reference throws broker timestamps away (`Raport.py:62`); Spark's
     * source exposes them, enabling bounded state + late-data handling. */
   def windowedValueCounts(msgs: DataFrame, windowLen: String,

@@ -89,4 +89,18 @@ class EngineSpec extends GraftSparkSpec {
     }
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  test("QueryFamily.replayStream is the only stream run in the queries layer") {
+    // a registry row that folds bounded input through a stream replays it
+    // through the one harness, which owns the source memo, the cleared
+    // state, the trigger and the bounded await
+    val root = new java.io.File("src/main/scala/graft/queries")
+    assert(root.isDirectory, "run from the repository root")
+    val needles = Seq("Trigger.AvailableNow", "awaitTermination")
+    val hits = scalaFiles(root).filter(_.getName != "QueryFamily.scala").flatMap { f =>
+      val text = read(f)
+      needles.filter(text.contains).map(n => s"${f.getPath}: $n")
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }

@@ -15,6 +15,16 @@ class StreamingSpec extends GraftSparkSpec {
   private def wideEvent(id: Long, user: Long, tpe: String, k: Int) =
     (id, user, tpe, s"""{"k": $k}""")
 
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The cumulative A1 snapshot of the newest report tick under `out`. */
+  private def latestValueCounts(out: String) = {
+    val last = new java.io.File(out).list().filter(_.startsWith("batch="))
+      .map(_.stripPrefix("batch=").toLong).max
+    spark.read.parquet(s"$out/batch=$last/value_counts")
+  }
+
   test("Complete-mode value counts == batch A1 over the same prefix, " +
     "and update cumulatively (T2)") {
     val s = spark
@@ -24,13 +34,14 @@ class StreamingSpec extends GraftSparkSpec {
     val input = MemoryStream[(Long, Long, String, Int)]
     val events = input.toDF().toDF("event_id", "user_id", "event_type", "k")
       .withColumn("props", format_string("""{"k": %d}""", col("k")))
-    val q = BehaviorStream.cumulativeValueCounts(
-      Behavior.fanoutMessages(events), "vc_test", "0 seconds").start()
+    val out = tempDir("graft-vc-")
+    val q = ReportSink.writer(Behavior.fanoutMessages(events), out,
+      tempDir("graft-vc-ckpt-"), cadence = "0 seconds").start()
     try {
       val batch1 = Seq((0L, 1L, "click", 7), (1L, 1L, "view", 7), (2L, 2L, "click", 9))
       input.addData(batch1: _*)
       q.processAllAvailable()
-      val snap1 = s.sql("SELECT * FROM vc_test")
+      val snap1 = latestValueCounts(out)
       val batchEquiv1 = Behavior.valueCounts(Behavior.fanoutMessages(
         batch1.toDF("event_id", "user_id", "event_type", "k")
           .withColumn("props", format_string("""{"k": %d}""", col("k")))))
@@ -41,7 +52,7 @@ class StreamingSpec extends GraftSparkSpec {
       val batch2 = Seq((3L, 3L, "click", 7), (4L, 1L, "home", 1))
       input.addData(batch2: _*)
       q.processAllAvailable()
-      val snap2 = s.sql("SELECT * FROM vc_test")
+      val snap2 = latestValueCounts(out)
       val all = (batch1 ++ batch2).toDF("event_id", "user_id", "event_type", "k")
         .withColumn("props", format_string("""{"k": %d}""", col("k")))
       val batchEquiv2 = Behavior.valueCounts(Behavior.fanoutMessages(all))
@@ -219,15 +230,16 @@ class StreamingSpec extends GraftSparkSpec {
       .select(col("event_id"), col("user_id"), col("event_type"), col("props"))
     batch.write.mode("overwrite").parquet(dir)
     val backlog = s.readStream.schema(batch.schema).parquet(dir)
-    val q = BehaviorStream.cumulativeValueCounts(
-      Behavior.fanoutMessages(backlog), "backfill_test")
+    val out = tempDir("graft-backfill-")
+    val q = ReportSink.writer(Behavior.fanoutMessages(backlog), out,
+      tempDir("graft-backfill-ckpt-"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try {
       // self-terminates once the backlog is drained — a ProcessingTime
       // trigger would hang here forever
       assert(q.awaitTermination(120000), "AvailableNow query did not terminate")
-      val snap = s.sql("SELECT * FROM backfill_test")
+      val snap = latestValueCounts(out)
       val expected = Behavior.valueCounts(
         Behavior.fanoutMessages(s.read.parquet(dir)))
       assert(snap.exceptAll(expected).count() === 0)
