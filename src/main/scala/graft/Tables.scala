@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's parquet star schema + event/LLM tables
   * (see TESTDATA.md / FIXTURES.md). All engine queries take the sf
@@ -11,8 +15,50 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Loads `<dir>/<name>.parquet` with its resolved schema, so the load
+    * runs no Spark job: `spark.read.parquet(path)` alone runs one job per
+    * load to infer the schema from the footers, and every query build
+    * loads its tables again. The schema is inferred once per JVM for each
+    * (path, `nanosAsLong`) and file listing (see [[schema]]). */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** A path's schema as of one recursive file listing. */
+  private final case class Resolved(listing: Seq[(String, Long, Long)], schema: StructType)
+
+  /** One entry per (path, `nanosAsLong`): [[Tables.events]] sets that
+    * conf, and it changes the inferred type of a TIMESTAMP(NANOS) column.
+    * A listing that differs (a rewritten fixture) replaces the entry. */
+  private val schemas = new ConcurrentHashMap[(String, String), Resolved]()
+
+  /** `path`'s parquet schema, inferred by Spark on a cold key or a changed
+    * listing (name, length and modification time of every file under the
+    * path). The inference job runs outside the map's locks, so concurrent
+    * loaders (`graft.Verify`'s threads) never wait on one another's job; two
+    * cold loaders of one path both infer the same schema. A path that does
+    * not exist falls through to Spark, which reports it as it always has. */
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path).schema
+    else {
+      val key = (path, spark.conf.get(NanosAsLong, "false"))
+      val files = fs.listFiles(p, true)
+      val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+      val hit = schemas.get(key)
+      if (hit != null && hit.listing == listing) hit.schema
+      else {
+        val resolved = Resolved(listing, spark.read.parquet(path).schema)
+        schemas.put(key, resolved)
+        resolved.schema
+      }
+    }
+  }
 
   /** Loads `events` and normalizes `ts` to the engine-wide contract:
     * LongType nanoseconds since epoch. The upstream writer has shipped the
@@ -20,7 +66,8 @@ object Tables {
     * (round 9+) — a schema drift that a typed source must absorb centrally
     * rather than in 13 query sites (reference `Raport.py:62` is schemaless
     * and tolerant by construction; this is the typed equivalent). Branch on
-    * the LOADED dtype:
+    * the LOADED dtype (the resolved schema [[apply]] loads with, inferred
+    * with `nanosAsLong` on):
     *   - LongType — parquet TIMESTAMP(NANOS) surfaced as an ns long via
     *     `nanosAsLong` (Spark's vectorized reader rejects NANOS otherwise);
     *     pass through.
@@ -32,7 +79,7 @@ object Tables {
     * oracle then agrees for BOTH schemas. Runtime SQLConf, so it works
     * under the driver's session too. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NanosAsLong, "true")
     val df = apply(spark, dir, "events")
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     import org.apache.spark.sql.functions.{col, lit, unix_micros}

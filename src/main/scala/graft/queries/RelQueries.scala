@@ -1290,16 +1290,20 @@ object RelQueries extends QueryFamily {
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
       val merged = weekly
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_merged"))
-      val direct = e.agg(
-        hll_sketch_estimate(hll_sketch_agg(col("user_id"))).as("est_direct"),
+      // a directly built sketch estimates with its HIP accumulator, a
+      // union of several sketches with the composite estimator, so the two
+      // differ by up to the rsd (1499 vs 1488 at sf0.1) on equal registers.
+      // The whole-period sketch is read through a union with itself
+      // (idempotent) so both sides use the union's estimator; the law (union
+      // at fixed lgK loses no register) is what the flag asserts
+      val direct = e.agg(hll_sketch_agg(col("user_id")).as("sk"),
         countDistinct(col("user_id")).as("exact_users"))
-      // merge_lossless within 1e-9 relative — exact double equality held
-      // on this Spark/DataSketches pairing but depends on HLL_4/HLL_8
-      // promotion internals inside hll_union_agg; the law itself (union at
-      // fixed lgK loses nothing) is what the flag asserts
+      val estDirect = hll_sketch_estimate(hll_union(col("sk"), col("sk")))
+      // within 1e-9 relative: exact double equality depends on HLL_4/HLL_8
+      // promotion internals inside the union
       merged.crossJoin(direct).select(col("exact_users"),
-        (abs(col("est_merged") - col("est_direct")) <=
-          lit(1e-9) * col("est_direct")).as("merge_lossless"),
+        (abs(col("est_merged") - estDirect) <=
+          lit(1e-9) * estDirect).as("merge_lossless"),
         (abs(col("est_merged") - col("exact_users")) <=
           lit(0.05) * col("exact_users")).as("within_5pct"))
     }),

@@ -34,6 +34,30 @@ class EngineSpec extends GraftSparkSpec {
     assert(k != null && k.forall(_.isDigit))
   }
 
+  test("the codegen cache holds a warm multi-stage query's classes") {
+    // sim_topk_sq8_ivf compiles about 106 classes cold at sf0.001, more
+    // than Spark's default 100-entry cache keeps: under that size each
+    // run recompiles about 65 of them. Whole-stage class names carry the
+    // codegen stage id, which AQE can number differently on a rerun, so
+    // the names are pinned id-free here; the second warm-up run takes any
+    // class the first run's plans did not share.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (q, dir) = ("sim_topk_sq8_ivf", "/root/testdata/sf0.001")
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(): Long = {
+      val before = compiles()
+      graft.operators.CacheScope.scoped {
+        SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+      compiles() - before
+    }
+    Engine.withConf(spark, Seq("spark.sql.codegen.useIdInClassName" -> "false")) {
+      run()
+      run()
+      assert(run() === 0)
+    }
+  }
+
   test("Engine.session is the only SparkSession builder in the sources") {
     // split so this file does not match itself
     val needle = "SparkSession" + ".builder"
