@@ -23,9 +23,12 @@ object Similarity {
     aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)
 
+  /** Sequential-fold squared L2 norm. */
+  private def normSq(v: Column): Column =
+    aggregate(transform(toDouble(v), x => x * x), lit(0.0), (a, x) => a + x)
+
   /** Sequential-fold L2 norm. */
-  def normSeq(a: Column): Column =
-    sqrt(aggregate(transform(toDouble(a), x => x * x), lit(0.0), (acc, x) => acc + x))
+  def normSeq(a: Column): Column = sqrt(normSq(a))
 
   /** Cosine similarity via the declarative higher-order-function fold —
     * kept as the reference implementation; interpreted, ~20 µs/row. */
@@ -37,6 +40,72 @@ object Similarity {
     * (asserted equal in tests), ~100× faster. */
   def cosineSeq(a: Column, b: Column): Column =
     graft.functions.VectorKernels.cosine(a, b)
+
+  // The ANN scaffold: every operator below is a candidate-pair source
+  // (cross join, LSH bucket, IVF cell, refine shortlist) fed through
+  // these steps, each written once. Pair frames carry (query_id, qv) and
+  // (neighbor_id, nv).
+
+  /** Pair scoring: drop each query's self-pair, then score the pair by
+    * [[cosineSeq]]`(qv, nv)` into `score`. */
+  private def scorePairs(pairs: DataFrame, score: String): DataFrame =
+    pairs.filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        cosineSeq(col("qv"), col("nv")).as(score))
+
+  /** Brute-force pairs: the bounded query side is broadcast EXPLICITLY
+    * (see [[bruteForceTopK]]) and crossed with every corpus row. */
+  private def crossPairs(q: DataFrame, n: DataFrame, score: String): DataFrame =
+    scorePairs(broadcast(q).crossJoin(n), score)
+
+  /** Per-query top-`limit`: `rank` = row_number over (score desc,
+    * neighbor_id) within each query — a total order under score ties. */
+  private def topK(pairs: DataFrame, score: String, limit: Int): DataFrame =
+    pairs.withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+      .orderBy(col(score).desc, col("neighbor_id"))))
+      .filter(col("rank") <= limit)
+
+  /** [[topK]] as the operators emit it: (query_id, rank, neighbor_id, score). */
+  private def topKRows(pairs: DataFrame, score: String, k: Int): DataFrame =
+    topK(pairs, score, k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col(score))
+
+  /** The recall contract of the approximate operators: each `approx` row
+    * (query_id, rank, neighbor_id, `score`) gains `recall_at_k`, the share
+    * of its query's `exact` top-k neighbors that `approx` found — 0.0,
+    * never NULL, for a query that found none. The per-query hit counts
+    * (≤ one row per query) are broadcast to the approx side. */
+  private[operators] def withRecall(approx: DataFrame, exact: DataFrame,
+      score: String, k: Int): DataFrame = {
+    val hits = approx.join(exact.select(col("query_id"), col("neighbor_id")),
+        Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
+    approx.join(broadcast(hits), Seq("query_id"), "left")
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col(score),
+        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+  }
+
+  /** ADC pairs of the brute-force PQ operators: float-exact queries ×
+    * every [[pqDequantized]] reconstruction. */
+  private def adcPairs(queries: DataFrame, rec: DataFrame, score: String): DataFrame =
+    crossPairs(queries.select(col("vec_id").as("query_id"),
+      toDouble(col("embedding")).as("qv")),
+      rec.select(col("vec_id").as("neighbor_id"), col("qv").as("nv")), score)
+
+  /** Stage 2 of the refine operators: re-score JUST the shortlist against
+    * the raw float vectors and keep the exact top-k. Both vectors re-join
+    * BY ID (the random-access flat-vector read of a real refine step),
+    * not via a distinct() over scored rows: an id-keyed equi-join beats
+    * deduplicating on a 64-element array key. */
+  private def refine(shortlist: DataFrame, corpus: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    topK(shortlist.select(col("query_id"), col("neighbor_id"))
+      .join(corpus.select(col("vec_id").as("neighbor_id"),
+        toDouble(col("embedding")).as("nx")), Seq("neighbor_id"))
+      .join(queries.select(col("vec_id").as("query_id"),
+        toDouble(col("embedding")).as("qv")), Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        cosineSeq(col("qv"), col("nx")).as("qcos")), "qcos", k)
 
   /** Exact top-k neighbors for each query vector by brute force:
     * queries × corpus cross join. The QUERY side is broadcast
@@ -52,18 +121,11 @@ object Similarity {
     * map-side, so the per-query window shuffles k·|queries| rows per
     * partition, never |queries|×|corpus|. The baseline every ANN
     * variant is measured against. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val pairs = broadcast(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-      .crossJoin(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qv"), col("nv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topKRows(crossPairs(
+      queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
+      corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")),
+      "cosine"), "cosine", k)
 
   /** Exact maximum-inner-product search (MIPS) via the norm-augmentation
     * reduction to cosine (Bachrach et al., RecSys 2014; Neyshabur &
@@ -91,35 +153,39 @@ object Similarity {
     * broadcast); the scale path is this SAME augmentation feeding
     * [[lshTopK]]/[[ivfTopK]] — the reduction is the operator. */
   def mipsTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    def normSq(v: Column): Column =
-      aggregate(transform(toDouble(v), x => x * x), lit(0.0), (a, x) => a + x)
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      toDouble(col("embedding")).as("nv"), normSq(col("embedding")).as("ns"))
-    val m2 = c.agg(max(col("ns")).as("m2"))
-    val caug = c.crossJoin(broadcast(m2))
-      .select(col("neighbor_id"), col("nv"),
-        concat(col("nv"), array(sqrt(col("m2") - col("ns")))).as("nav"))
-    val qaug = queries.select(col("vec_id").as("query_id"),
-      toDouble(col("embedding")).as("qv"))
-      .withColumn("qav", concat(col("qv"), array(lit(0.0))))
+    val caug = mipsCorpus(corpus, "neighbor_id")
+    val qaug = mipsQueries(queries, "query_id")
     // hot path: ONLY the native codegen'd cosine kernel runs per pair
     // (fold-order-identical to the HOF/oracle — the SimilaritySpec
     // bit-equality contract); the raw inner product is recomputed on
     // the k·|queries| winners after ranking, not on every pair
-    val pairs = broadcast(qaug.select(col("query_id"), col("qav")))
-      .crossJoin(caug.select(col("neighbor_id"), col("nav")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qav"), col("nav")).as("aug_cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("aug_cosine").desc, col("neighbor_id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .join(broadcast(qaug.select(col("query_id"), col("qv"))),
-        Seq("query_id"))
-      .join(caug.select(col("neighbor_id"), col("nv")), Seq("neighbor_id"))
+    val pairs = crossPairs(qaug.select(col("query_id"), col("embedding").as("qv")),
+      caug.select(col("neighbor_id"), col("embedding").as("nv")), "aug_cosine")
+    topK(pairs, "aug_cosine", k)
+      .join(broadcast(qaug.select(col("query_id"), col("qraw"))), Seq("query_id"))
+      .join(caug.select(col("neighbor_id"), col("nraw")), Seq("neighbor_id"))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
-        dotSeq(col("qv"), col("nv")).as("ip"), col("aug_cosine"))
+        dotSeq(col("qraw"), col("nraw")).as("ip"), col("aug_cosine"))
   }
+
+  /** [[mipsTopK]]'s corpus side: `(id, nraw, embedding)`, `nraw` the
+    * double-cast vector and `embedding` its augmentation
+    * [nraw, √(M² − ‖x‖²)]. The id column is named here, where it is
+    * made: renamed after the cross join, it would cost a Project of its
+    * own on top of it. */
+  private def mipsCorpus(corpus: DataFrame, id: String): DataFrame = {
+    val c = corpus.select(col("vec_id").as(id), toDouble(col("embedding")).as("nraw"),
+      normSq(col("embedding")).as("ns"))
+    c.crossJoin(broadcast(c.agg(max(col("ns")).as("m2"))))
+      .select(col(id), col("nraw"),
+        concat(col("nraw"), array(sqrt(col("m2") - col("ns")))).as("embedding"))
+  }
+
+  /** [[mipsTopK]]'s query side: `(id, qraw, embedding)`, `embedding`
+    * = [qraw, 0]. */
+  private def mipsQueries(queries: DataFrame, id: String): DataFrame =
+    queries.select(col("vec_id").as(id), toDouble(col("embedding")).as("qraw"))
+      .withColumn("embedding", concat(col("qraw"), array(lit(0.0))))
 
   /** MIPS served by the ACTUAL sign-LSH index — the payoff of
     * [[mipsTopK]]'s reduction: the norm-augmented corpus/query vectors
@@ -131,20 +197,9 @@ object Similarity {
     * the score column being the augmented cosine (a per-query monotone
     * transform of the inner product). */
   def mipsTopKLsh(corpus: DataFrame, queries: DataFrame, k: Int,
-      nBits: Int = 8, dim: Int = 64): DataFrame = {
-    def normSq(v: Column): Column =
-      aggregate(transform(toDouble(v), x => x * x), lit(0.0), (a, x) => a + x)
-    val c = corpus.select(col("vec_id"), toDouble(col("embedding")).as("v"),
-      normSq(col("embedding")).as("ns"))
-    val m2 = c.agg(max(col("ns")).as("m2"))
-    val caug = c.crossJoin(broadcast(m2))
-      .select(col("vec_id"),
-        concat(col("v"), array(sqrt(col("m2") - col("ns")))).as("embedding"))
-    val qaug = queries.select(col("vec_id"),
-      concat(toDouble(col("embedding")), array(lit(0.0))).as("embedding"))
-    lshTopK(caug, qaug, k, nBits, dim + 1, probeHamming = 1)
-      .withColumnRenamed("cosine", "aug_cosine")
-  }
+      nBits: Int = 8, dim: Int = 64): DataFrame =
+    lshTopK(mipsCorpus(corpus, "vec_id"), mipsQueries(queries, "vec_id"), k, nBits, dim + 1,
+      probeHamming = 1).withColumnRenamed("cosine", "aug_cosine")
 
   /** Fixed random hyperplanes for sign-LSH (deterministic seed). Exposed
     * package-private so the oracle SQL can embed the same constants as
@@ -184,18 +239,16 @@ object Similarity {
     val qb =
       if (probeHamming == 0) qb0.withColumnRenamed("bucket0", "bucket")
       else qb0.select(col("query_id"), col("qv"),
-        explode(array(col("bucket0") +:
-          (0 until nBits).map(b => col("bucket0").bitwiseXOR(lit(1L << b))): _*))
-          .as("bucket"))
-    val pairs = qb.join(cb, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qv"), col("nv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+        probeSet(col("bucket0"), nBits).as("bucket"))
+    topKRows(scorePairs(qb.join(cb, Seq("bucket")), "cosine"), "cosine", k)
   }
+
+  /** The hamming-1 multi-probe set: `bucket` and its nBits single-bit
+    * flips, exploded one row each. The buckets are distinct, so joined
+    * against exact corpus buckets each pair meets at most once. */
+  private def probeSet(bucket: Column, nBits: Int): Column =
+    explode(array(bucket +:
+      (0 until nBits).map(b => bucket.bitwiseXOR(lit(1L << b))): _*))
 
   /** IVF (inverted-file) ANN — the classic centroid-partitioned scale
     * path: k-means-lite centroids over a sample, every corpus vector
@@ -212,27 +265,32 @@ object Similarity {
     * whole algorithm is bit-for-bit replicable by the DuckDB oracle SQL. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int,
       nProbe: Int, lloydIters: Int = 2, nRows: Option[Long] = None): DataFrame = {
-    // double-cast view: centroids are double arrays, so assignment runs
-    // the double cosine kernel on both sides
-    val corpusD = corpus.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
     // `nRows` lets a caller that already knows the corpus size
     // (sq8IvfTopK: the quantized view is row-for-row the raw table) skip
     // an extra count action over a derived pipeline.
-    val n = nRows.getOrElse(corpus.count())
-    val centroids = ivfCentroids(corpusD, nCells, lloydIters, n)
-    val assigned = ivfAssign(corpusD, centroids)
-      .select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("cell"))
-    val probes = ivfProbes(queries, centroids, nProbe)
-    val pairs = probes.join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qv"), col("nv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    val ivf = ivfLayout(corpus, nCells, lloydIters, nRows.getOrElse(corpus.count()))
+    ivfScan(ivfProbes(queries, ivf.centroids, nProbe), ivf.assigned, k)
   }
+
+  /** The coarse-quantizer layout every IVF operator starts from, over the
+    * double-cast corpus `(vec_id, v)` (centroids are double arrays, so
+    * assignment runs the double cosine kernel on both sides):
+    * `centroids(cell, cv)` its [[ivfCentroids]] training and
+    * `assigned(vec_id, v, cell)` each vector's nearest cell. */
+  private final case class IvfLayout(centroids: DataFrame, assigned: DataFrame)
+
+  private def ivfLayout(corpus: DataFrame, nCells: Int, lloydIters: Int,
+      n: Long): IvfLayout = {
+    val corpusD = corpus.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val centroids = ivfCentroids(corpusD, nCells, lloydIters, n)
+    IvfLayout(centroids, ivfAssign(corpusD, centroids))
+  }
+
+  /** Float-exact scan of the probed cells: every (probe, assigned vector)
+    * pair sharing a cell, scored and cut to the per-query top-k. */
+  private def ivfScan(probes: DataFrame, assigned: DataFrame, k: Int): DataFrame =
+    topKRows(scorePairs(probes.join(assigned.select(col("vec_id").as("neighbor_id"),
+      col("v").as("nv"), col("cell")), Seq("cell")), "cosine"), "cosine", k)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     * deduplication at scale: k-means-cluster the embedding corpus with
@@ -258,19 +316,10 @@ object Similarity {
     * giant cells hierarchically, same as FAISS IVF imbalance handling). */
   def semDedup(corpus: DataFrame, threshold: Double, nCells: Int = 16,
       lloydIters: Int = 2): DataFrame = {
-    val corpusD = corpus.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val n = corpus.count()
-    val centroids = ivfCentroids(corpusD, nCells, lloydIters, n)
-    val assigned = ivfAssign(corpusD, centroids)
-    assigned.select(col("cell"), col("vec_id").as("vec_a"),
-        col("v").as("va"))
+    val assigned = ivfLayout(corpus, nCells, lloydIters, corpus.count()).assigned
+    dupPairs(assigned.select(col("cell"), col("vec_id").as("vec_a"), col("v").as("va"))
       .join(assigned.select(col("cell"), col("vec_id").as("vec_b"),
-        col("v").as("vb")), Seq("cell"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("cell"), col("vec_a"), col("vec_b"),
-        cosineSeq(col("va"), col("vb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+        col("v").as("vb")), Seq("cell")), threshold, col("cell"))
   }
 
   /** Clustering-quality evaluation of the coarse quantizer — the
@@ -289,12 +338,8 @@ object Similarity {
     * partials — no per-cell buffering, nothing O(n²). */
   def kmeansStats(corpus: DataFrame, nCells: Int = 16,
       lloydIters: Int = 2): DataFrame = {
-    val corpusD = corpus.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val n = corpus.count()
-    val centroids = ivfCentroids(corpusD, nCells, lloydIters, n)
-    ivfAssign(corpusD, centroids)
-      .join(broadcast(centroids), Seq("cell"))
+    val ivf = ivfLayout(corpus, nCells, lloydIters, corpus.count())
+    ivf.assigned.join(broadcast(ivf.centroids), Seq("cell"))
       .select(col("cell"),
         nanvl(cosineSeq(col("v"), col("cv")), lit(-2.0)).as("cos"))
       .groupBy(col("cell"))
@@ -401,8 +446,7 @@ object Similarity {
     * asserted in VectorArgminSpec. */
   private def ivfProbes(queries: DataFrame, centroids: DataFrame,
       nProbe: Int): DataFrame =
-    queries.select(col("vec_id").as("query_id"),
-      transform(col("embedding"), x => x.cast("double")).as("qv"))
+    queries.select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
       .crossJoin(broadcast(centroidArray(centroids)))
       .select(col("query_id"), col("qv"),
         explode(graft.functions.VectorKernels.ivf_probes(
@@ -462,23 +506,10 @@ object Similarity {
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val deq = sq8Dequantized(corpus)
     val qs = deq.join(queries.select(col("vec_id")), Seq("vec_id"), "left_semi")
-    // query side broadcast for the same scale reason as [[bruteForceTopK]]
-    val pairs = broadcast(qs.select(col("vec_id").as("query_id"), col("qv").as("qa")))
-      .crossJoin(deq.select(col("vec_id").as("neighbor_id"), col("qv").as("qb")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qa"), col("qb")).as("qcos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val approx = pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    val exact = bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    approx.join(broadcast(hits), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+    val approx = topK(crossPairs(
+      qs.select(col("vec_id").as("query_id"), col("qv")),
+      deq.select(col("vec_id").as("neighbor_id"), col("qv").as("nv")), "qcos"), "qcos", k)
+    withRecall(approx, bruteForceTopK(corpus, queries, k), "qcos", k)
   }
 
   /** SQ8 codes UNDER the IVF cell layout — the composition a real
@@ -509,13 +540,8 @@ object Similarity {
     val n = Some(corpus.count())
     val approx = ivfTopK(deq, qdeq, k, nCells, nProbe, lloydIters, nRows = n)
       .withColumnRenamed("cosine", "qcos")
-    val exact = ivfTopK(corpus, queries, k, nCells, nProbe, lloydIters, nRows = n)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    approx.join(broadcast(hits), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+    withRecall(approx,
+      ivfTopK(corpus, queries, k, nCells, nProbe, lloydIters, nRows = n), "qcos", k)
   }
 
   /** Product quantization (PQ), returned in the DEQUANTIZED double
@@ -579,9 +605,6 @@ object Similarity {
       .select(col("vec_id"), col("code"))
     var codebook = sv.join(samp, Seq("vec_id"))
       .select(col("sub"), col("code"), col("sv").as("cw"))
-    def l2sq(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, z) => acc + z)
     // per-sub code-sorted codeword array: the broadcastable index the
     // argmin folds run against
     def cbArray(cb: DataFrame): DataFrame =
@@ -644,25 +667,8 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       subDim: Int = 16, ksub: Int = 16, lloydIters: Int = 1): DataFrame = {
     val rec = pqDequantized(corpus, subDim, ksub, lloydIters)
-    val qs = queries.select(col("vec_id").as("query_id"),
-      toDouble(col("embedding")).as("qa"))
-    // query side broadcast for the same scale reason as [[bruteForceTopK]]
-    val pairs = broadcast(qs)
-      .crossJoin(rec.select(col("vec_id").as("neighbor_id"), col("qv").as("nv")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qa"), col("nv")).as("qcos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val approx = pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    val exact = bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    approx.join(broadcast(hits), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+    withRecall(topK(adcPairs(queries, rec, "qcos"), "qcos", k),
+      bruteForceTopK(corpus, queries, k), "qcos", k)
   }
 
   /** Two-stage PQ search with exact refine — FAISS's IndexRefineFlat
@@ -687,36 +693,9 @@ object Similarity {
       shortlistFactor: Int = 3, subDim: Int = 16, ksub: Int = 16,
       lloydIters: Int = 1): DataFrame = {
     val rec = pqDequantized(corpus, subDim, ksub, lloydIters)
-    val qs = queries.select(col("vec_id").as("query_id"),
-      toDouble(col("embedding")).as("qa"))
-    // query side broadcast for the same scale reason as [[bruteForceTopK]]
-    val adc = broadcast(qs)
-      .crossJoin(rec.select(col("vec_id").as("neighbor_id"), col("qv").as("nv")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qa"), col("nv")).as("adc_cos"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos").desc, col("neighbor_id"))
-    val shortlist = adc.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= shortlistFactor * k)
-      .select(col("query_id"), col("neighbor_id"))
-    val refined = shortlist
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        toDouble(col("embedding")).as("nx")), Seq("neighbor_id"))
-      .join(qs, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineSeq(col("qa"), col("nx")).as("qcos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val topk = refined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    val exact = bruteForceTopK(corpus, queries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = topk.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    topk.join(broadcast(hits), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+    val shortlist = topK(adcPairs(queries, rec, "adc_cos"), "adc_cos", shortlistFactor * k)
+    withRecall(refine(shortlist, corpus, queries, k),
+      bruteForceTopK(corpus, queries, k), "qcos", k)
   }
 
   /** PQ codes UNDER the IVF cell layout — IVF-PQ, the composition a
@@ -735,43 +714,31 @@ object Similarity {
   def pqIvfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int,
       nProbe: Int, lloydIters: Int = 1): DataFrame = {
     // NOT cached — same AQE ReusedExchange rationale as sq8IvfTopK.
+    val ivf = ivfPq(corpus, queries, k, nCells, nProbe, lloydIters, "qcos")
+    withRecall(topKRows(ivf.adc, "qcos", k), ivf.exact, "qcos", k)
+  }
+
+  /** The stages [[pqIvfTopK]] and [[pqIvfRefineTopK]] share: `adc`, the
+    * probed cells' (query, PQ-coded neighbor) pairs scored into
+    * `adcScore`, and `exact`, the float-exact top-k over the SAME probed
+    * cells that the recall contract compares against. */
+  private final case class IvfPqScan(adc: DataFrame, exact: DataFrame)
+
+  private def ivfPq(corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int,
+      nProbe: Int, lloydIters: Int, adcScore: String): IvfPqScan = {
     // One count action serves the PQ stride AND the single IVF init.
     val n = corpus.count()
-    val corpusD = corpus.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val centroids = ivfCentroids(corpusD, nCells, lloydIters, n)
-    val assigned = ivfAssign(corpusD, centroids)
-    val probes = ivfProbes(queries, centroids, nProbe)
+    val ivf = ivfLayout(corpus, nCells, lloydIters, n)
+    val probes = ivfProbes(queries, ivf.centroids, nProbe)
     // PQ codes live UNDER the shared layout: reconstruction joined to the
     // raw-corpus cell assignment by vec_id (an id-keyed equi-join — the
     // on-disk analogue is simply storing the code in the cell's bucket)
-    val assignedRec = assigned.select(col("vec_id").as("neighbor_id"), col("cell"))
+    val coded = ivf.assigned.select(col("vec_id").as("neighbor_id"), col("cell"))
       .join(pqDequantized(corpus, nRows = Some(n))
         .select(col("vec_id").as("neighbor_id"), col("qv").as("nv")),
         Seq("neighbor_id"))
-    def rankTopK(pairs: DataFrame, score: String): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col(score).desc, col("neighbor_id"))
-      pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-    }
-    val approx = rankTopK(
-      probes.join(assignedRec, Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineSeq(col("qv"), col("nv")).as("qcos")), "qcos")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"))
-    val exact = rankTopK(
-      probes.join(assigned.select(col("vec_id").as("neighbor_id"),
-          col("v").as("nv"), col("cell")), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineSeq(col("qv"), col("nv")).as("cosine")), "cosine")
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    approx.join(broadcast(hits), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+    IvfPqScan(scorePairs(probes.join(coded, Seq("cell")), adcScore),
+      ivfScan(probes, ivf.assigned, k))
   }
 
   /** IVF-PQ **with exact refine** — the full production composition a
@@ -794,55 +761,13 @@ object Similarity {
   def pqIvfRefineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCells: Int, nProbe: Int, shortlistFactor: Int = 3,
       lloydIters: Int = 1): DataFrame = {
-    val n = corpus.count()
-    val corpusD = corpus.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val centroids = ivfCentroids(corpusD, nCells, lloydIters, n)
-    val assigned = ivfAssign(corpusD, centroids)
-    val probes = ivfProbes(queries, centroids, nProbe)
-    val assignedRec = assigned.select(col("vec_id").as("neighbor_id"), col("cell"))
-      .join(pqDequantized(corpus, nRows = Some(n))
-        .select(col("vec_id").as("neighbor_id"), col("qv").as("nv")),
-        Seq("neighbor_id"))
-    def rankTopK(pairs: DataFrame, score: String, limit: Int): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col(score).desc, col("neighbor_id"))
-      pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= limit)
-    }
-    // stage 1: ADC over the probed cells, keep a 3k shortlist per query
-    val shortlist = rankTopK(
-      probes.join(assignedRec, Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineSeq(col("qv"), col("nv")).as("adc_cos")),
-      "adc_cos", shortlistFactor * k)
-      .select(col("query_id"), col("neighbor_id"))
-    // stage 2: exact re-rank of JUST the shortlist against raw vectors —
-    // query vectors re-join from the queries frame BY ID (same doubles
-    // as the probes' qv), not via a distinct() over the probe rows: an
-    // id-keyed equi-join beats deduplicating on a 64-element array key
-    val approx = rankTopK(
-      shortlist
-        .join(corpusD.select(col("vec_id").as("neighbor_id"),
-          col("v").as("nx")), Seq("neighbor_id"))
-        .join(queries.select(col("vec_id").as("query_id"),
-          toDouble(col("embedding")).as("qv")), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineSeq(col("qv"), col("nx")).as("qcos")), "qcos", k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"))
-    // contract: float-exact top-k over the SAME probed cells
-    val exact = rankTopK(
-      probes.join(assigned.select(col("vec_id").as("neighbor_id"),
-          col("v").as("nv"), col("cell")), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineSeq(col("qv"), col("nv")).as("cosine")), "cosine", k)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    approx.join(broadcast(hits), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall_at_k"))
+    val ivf = ivfPq(corpus, queries, k, nCells, nProbe, lloydIters, "adc_cos")
+    // stage 1: ADC over the probed cells, keep a 3k shortlist per query;
+    // stage 2: exact re-rank of JUST the shortlist against raw vectors
+    val shortlist = topK(ivf.adc, "adc_cos", shortlistFactor * k)
+    withRecall(refine(shortlist, corpus, queries, k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos")),
+      ivf.exact, "qcos", k)
   }
 
   /** Hard-negative triplet mining for embedding-model training — the
@@ -871,20 +796,19 @@ object Similarity {
       col("label").as("a_label"), col("embedding").as("va"))
     val c = corpus.select(col("vec_id").as("cand"),
       col("label").as("c_label"), col("embedding").as("vc"))
-    val scored = a.crossJoin(c).filter(col("anchor") =!= col("cand"))
+    tripletArgmax(a.crossJoin(c))
+  }
+
+  /** The candidate scoring and per-(anchor, same?) argmax + margin tail
+    * shared by [[tripletMine]] and [[tripletMineLsh]]. */
+  private def tripletArgmax(pairs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("anchor"), col("same"))
+      .orderBy(col("cosine").desc, col("cand"))
+    pairs.filter(col("anchor") =!= col("cand"))
       .select(col("anchor"), col("cand"),
         (col("c_label") === col("a_label")).as("same"),
         cosineSeq(col("va"), col("vc")).as("cosine"))
-    tripletArgmax(scored)
-  }
-
-  /** The per-(anchor, same?) argmax + margin tail shared by
-    * [[tripletMine]] and [[tripletMineLsh]]. */
-  private def tripletArgmax(scored: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("anchor"), col("same"))
-      .orderBy(col("cosine").desc, col("cand"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .groupBy(col("anchor"))
       .agg(max(when(col("same"), struct(col("cand"), col("cosine")))).as("p"),
         max(when(!col("same"), struct(col("cand"), col("cosine")))).as("n"))
@@ -910,18 +834,10 @@ object Similarity {
       lshBucket(col("embedding"), nBits, dim).as("bucket"))
     val probe = cb.filter(anchorPred).select(col("vec_id").as("anchor"),
       col("label").as("a_label"), col("embedding").as("va"),
-      explode(array(col("bucket") +:
-        (0 until nBits).map(b => col("bucket").bitwiseXOR(lit(1L << b))): _*))
-        .as("bucket"))
-    // probe buckets distinct, corpus buckets exact → no pair dedup needed
-    val scored = probe.join(
+      probeSet(col("bucket"), nBits).as("bucket"))
+    tripletArgmax(probe.join(
       cb.select(col("vec_id").as("cand"), col("label").as("c_label"),
-        col("embedding").as("vc"), col("bucket")), Seq("bucket"))
-      .filter(col("anchor") =!= col("cand"))
-      .select(col("anchor"), col("cand"),
-        (col("c_label") === col("a_label")).as("same"),
-        cosineSeq(col("va"), col("vc")).as("cosine"))
-    tripletArgmax(scored)
+        col("embedding").as("vc"), col("bucket")), Seq("bucket")))
   }
 
   /** Corpus-calibrated near-dup cosine threshold (round 15).
@@ -959,10 +875,18 @@ object Similarity {
     * Exact but O(n²) — the capability baseline;
     * [[embeddingDupPairsLsh]] is the 100 TB plan. */
   def embeddingDupPairs(corpus: DataFrame, threshold: Double): DataFrame =
-    corpus.select(col("vec_id").as("vec_a"), col("embedding").as("va"))
-      .crossJoin(corpus.select(col("vec_id").as("vec_b"), col("embedding").as("vb")))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"), cosineSeq(col("va"), col("vb")).as("cosine"))
+    dupPairs(corpus.select(col("vec_id").as("vec_a"), col("embedding").as("va"))
+      .crossJoin(corpus.select(col("vec_id").as("vec_b"), col("embedding").as("vb"))),
+      threshold)
+
+  /** Near-dup verify shared by the self-join operators ([[embeddingDupPairs]],
+    * [[embeddingDupPairsLsh]], [[semDedup]]): each candidate pair once as
+    * vec_a < vec_b, scored by [[cosineSeq]]`(va, vb)` and kept at
+    * cosine ≥ threshold; the `lead` columns ride in front. */
+  private def dupPairs(pairs: DataFrame, threshold: Double, lead: Column*): DataFrame =
+    pairs.filter(col("vec_a") < col("vec_b"))
+      .select(lead ++ Seq(col("vec_a"), col("vec_b"),
+        cosineSeq(col("va"), col("vb")).as("cosine")): _*)
       .filter(col("cosine") >= threshold)
 
   /** Leading principal component of the embedding corpus by EXACT
@@ -1114,15 +1038,8 @@ object Similarity {
     val cb = corpus.select(col("vec_id"), col("embedding"),
       lshBucket(col("embedding"), nBits, dim).as("bucket"))
     val probe = cb.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
-      explode(array(col("bucket") +:
-        (0 until nBits).map(b => col("bucket").bitwiseXOR(lit(1L << b))): _*))
-        .as("bucket"))
-    probe.join(
-      cb.select(col("vec_id").as("vec_b"), col("embedding").as("vb"),
-        col("bucket")), Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        cosineSeq(col("va"), col("vb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+      probeSet(col("bucket"), nBits).as("bucket"))
+    dupPairs(probe.join(cb.select(col("vec_id").as("vec_b"),
+      col("embedding").as("vb"), col("bucket")), Seq("bucket")), threshold)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{CacheScope, TextOps}
 
@@ -35,14 +35,8 @@ object DsirScreen {
     TextOps.dsirScore(batch, model.dim, model.numBuckets)
 
   /** Streaming wiring: per micro-batch, score and write one partition
-    * directory (same foreachBatch layout as [[QualityScreen.writer]]). */
+    * directory ([[BatchDirWriter]]). */
   def writer(docStream: DataFrame, model: DsirModel, outDir: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
+    BatchDirWriter(docStream, outDir, checkpoint)(scoreBatch(_, model))
 }

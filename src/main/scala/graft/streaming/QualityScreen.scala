@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{CacheScope, TextOps}
 
@@ -41,14 +41,8 @@ object QualityScreen {
     TextOps.knScreen(batch, model.c2t, model.w1stats, model.nc, model.nt)
 
   /** Streaming wiring: per micro-batch, score and write one partition
-    * directory (same foreachBatch layout as [[StreamingDedup.writer]]). */
+    * directory ([[BatchDirWriter]]). */
   def writer(docStream: DataFrame, model: KnModel, outDir: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
+    BatchDirWriter(docStream, outDir, checkpoint)(scoreBatch(_, model))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{Dedup, Similarity}
 
@@ -146,14 +146,8 @@ object StreamingDedup {
   def contaminationWriter(docStream: DataFrame, benchGrams: DataFrame,
       n: Int, flagFrac: Double, outDir: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextOps
-          .contaminationReportIndexed(batch, benchGrams, n, flagFrac)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
+    BatchDirWriter(docStream, outDir, checkpoint)(
+      graft.operators.TextOps.contaminationReportIndexed(_, benchGrams, n, flagFrac))
 
   /** Ingest-time Bloom screen: the 8 KiB history bitset
     * ([[graft.operators.Dedup.bloomBitset]], built ONCE before the
@@ -167,24 +161,14 @@ object StreamingDedup {
   def bloomWriter(docStream: DataFrame, bitset: Array[Long],
       chunkSize: Int, outDir: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.bloomProbe(batch, bitset, chunkSize)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
+    BatchDirWriter(docStream, outDir, checkpoint)(
+      Dedup.bloomProbe(_, bitset, chunkSize))
 
   /** Streaming wiring: each micro-batch of documents is checked against
     * the index and the flagged pairs written via foreachBatch. */
   def writer(docStream: DataFrame, indexBands: DataFrame,
       indexShingles: DataFrame, threshold: Double, outDir: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, indexBands, indexShingles, threshold)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
+    BatchDirWriter(docStream, outDir, checkpoint)(
+      dedupBatch(_, indexBands, indexShingles, threshold))
 }

@@ -127,4 +127,18 @@ class EngineSpec extends GraftSparkSpec {
     }
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  test("Similarity's ANN scaffold is written once: one recall contract, one top-k window") {
+    // every approximate operator reaches the recall contract and the
+    // per-query top-k through one helper each, so a change to either (a
+    // tie-break, the zero-hit value) lands in every operator at once
+    val root = new java.io.File("src/main/scala/graft/operators")
+    assert(root.isDirectory, "run from the repository root")
+    val text = scalaFiles(root).map(read).mkString("\n")
+    def count(needle: String): Int =
+      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0).size
+    assert(count(""".as("recall_at_k")""") === 1)
+    assert(count("""Window.partitionBy(col("query_id"))""") === 1)
+  }
 }

@@ -407,6 +407,28 @@ class SimilaritySpec extends GraftSparkSpec {
     assert(out.head.getDouble(2) > 0.0)   // eigval = N₀₀ > 0
   }
 
+  test("withRecall: hand-computed recall, zero hits read 0.0, approx rows kept") {
+    import spark.implicits._
+    // query 1 finds 2 of its 3 exact neighbors (10 and 11, not 12);
+    // query 2 finds none of its 2
+    val approx = Seq((1L, 1, 10L, 0.9), (1L, 2, 11L, 0.8), (1L, 3, 19L, 0.7),
+      (2L, 1, 20L, 0.6), (2L, 2, 21L, 0.5)).toDF("query_id", "rank", "neighbor_id", "qcos")
+    val exact = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 30L), (2L, 31L))
+      .toDF("query_id", "neighbor_id")
+    val out = Similarity.withRecall(approx, exact, "qcos", 3)
+    assert(out.columns.toSeq ===
+      Seq("query_id", "rank", "neighbor_id", "qcos", "recall_at_k"))
+    onBothPaths {
+      val rows = out.collect()
+      assert(rows.length === 5)
+      val recall = rows.groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.map(r => Option(r.get(4))).toSeq
+      }
+      assert(recall(1L) === Seq.fill(3)(Some(2.0 / 3)))
+      assert(recall(2L) === Seq(Some(0.0), Some(0.0))) // not NULL
+    }
+  }
+
   test("rrfFuse: hand-computed reciprocal-rank fusion, missing ranks, ties") {
     import spark.implicits._
     // text list: docs 1,2,3 at ranks 1,2,3; vec list: docs 3,4 at 1,2
